@@ -59,6 +59,47 @@ HIGH_VARIANCE_ROWS = frozenset(
 )
 
 
+# Sentinel gate: a row is flagged when a sentinel reading next to it is
+# strictly greater (>) than SENTINEL_FACTOR x the window's median reading
+# (floored at SENTINEL_FLOOR_S so an all-fast window never flags on µs jitter),
+# or strictly greater than SENTINEL_CEILING_S, so a window that is slow
+# throughout is flagged too.
+SENTINEL_FACTOR = 3.0
+SENTINEL_FLOOR_S = 0.15
+SENTINEL_CEILING_S = 0.5
+
+
+def sentinel_df(spark):
+    """The fixed contention-probe job: one hash aggregate over 1M generated
+    rows. max, not sum: a sum of 64-bit hashes overflows under ANSI mode."""
+    from pyspark.sql import functions as F
+
+    return spark.range(0, 1_000_000, 1, 8).select(F.max(F.xxhash64("id")).alias("h"))
+
+
+def flag_rows(names: list[str], sentinels: list[float | None]) -> tuple[list[str], float | None]:
+    """(flagged row names, median sentinel reading).
+
+    sentinels[i] is the reading taken just before names[i] and
+    sentinels[i + 1] the one just after it; None is a sentinel that failed and
+    never flags. With no readings at all the median is None."""
+    readings = sorted(t for t in sentinels if t is not None)
+    if not readings:
+        return [], None
+    med = readings[len(readings) // 2]
+    gate = min(max(SENTINEL_FACTOR * med, SENTINEL_FLOOR_S), SENTINEL_CEILING_S)
+    flagged = [
+        name
+        for i, name in enumerate(names)
+        if any(t is not None and t > gate for t in sentinels[i:i + 2])
+    ]
+    return flagged, round(med, 4)
+
+
+def _log_skip(what: str, e: Exception) -> None:
+    print(f"bench: {what} failed, skipped: {str(e).splitlines()[0][:200]}", file=sys.stderr)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -137,8 +178,8 @@ def main() -> int:
     # during the first timed queries)
     try:
         spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass
+    except Exception as e:
+        _log_skip("System.gc", e)
 
     # Each query is timed RUNS times and the minimum is reported: the host
     # shows intermittent multi-second contention spikes (±3x on identical
@@ -158,29 +199,46 @@ def main() -> int:
     # Contention sentinel (VERDICT r15 item 7): the host shows multi-minute
     # contention episodes that can cover a whole min-of-N window, which past
     # rounds could only diagnose after the fact by re-running rows. A fixed
-    # ~40 ms probe job (same shape every time: hash-agg over a generated
-    # range, noop sink) runs between rows; rows whose surrounding sentinel
-    # readings spike ≥3× the window's median sentinel are flagged in the
-    # output (`sentinel_flagged`) so a contaminated window is machine-visible
-    # instead of a footnote. Measurement methodology for the queries
-    # themselves is UNCHANGED (same timed action, same min-of-N, sentinel
-    # runs outside every timing window).
-    from pyspark.sql import functions as F  # noqa: F811
+    # probe job (sentinel_df, the same shape every time) runs between rows;
+    # flag_rows marks the rows whose surrounding readings are slow. Measurement
+    # methodology for the queries themselves is UNCHANGED (same timed action,
+    # same min-of-N, the sentinel runs outside every timing window). A failing
+    # sentinel or GC call is logged and skipped, never fatal.
+    from duckdb_ml_spark.session import codegen_stats
 
-    def _sentinel() -> float:
-        t0 = time.perf_counter()
-        _materialize(
-            spark.range(0, 1_000_000, 1, 8).select(
-                F.sum(F.xxhash64("id")).alias("h")
-            )
-        )
-        return time.perf_counter() - t0
+    def _sentinel() -> float | None:
+        try:
+            t0 = time.perf_counter()
+            _materialize(sentinel_df(spark))
+            return time.perf_counter() - t0
+        except Exception as e:
+            _log_skip("sentinel", e)
+            return None
+
+    def _compiled() -> int | None:
+        try:
+            return codegen_stats(spark)[0]
+        except Exception as e:
+            _log_skip("codegen_stats", e)
+            return None
+
+    def _settle() -> None:
+        # drop persisted blocks and collect garbage so one query's allocation
+        # debt isn't paid inside the next query's timing window
+        try:
+            spark.catalog.clearCache()
+            spark.sparkContext._jvm.System.gc()
+        except Exception as e:
+            _log_skip("clearCache/System.gc", e)
 
     _sentinel()  # JIT/codegen warm so reading #1 matches the rest
-    sentinels: list[float] = [_sentinel()]
+    sentinels: list[float | None] = [_sentinel()]
     times: dict[str, float] = {}
+    # generated classes compiled while a row ran (codegen-cache misses)
+    compiles: dict[str, int | None] = {}
     for name, fn in qs.items():
         best = -1.0
+        c0 = _compiled()
         for _ in range(max(RUNS, 5) if name in HIGH_VARIANCE_ROWS else RUNS):
             t0 = time.perf_counter()
             try:
@@ -192,28 +250,13 @@ def main() -> int:
                 best = -1.0
                 break
             finally:
-                # between runs (t already captured): drop persisted blocks and
-                # collect garbage so one query's allocation debt doesn't get
-                # paid inside the next query's timing window
-                try:
-                    spark.catalog.clearCache()
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
+                _settle()  # between runs, t already captured
+        c1 = _compiled()
+        compiles[name] = None if c0 is None or c1 is None else c1 - c0
         times[name] = round(best, 3) if best >= 0 else -1.0
         sentinels.append(_sentinel())
 
-    # flag rows whose window overlapped a contention episode: either
-    # surrounding sentinel ≥3× the window median (floor 0.15 s so an
-    # all-fast window never flags on µs jitter)
-    med = sorted(sentinels)[len(sentinels) // 2]
-    gate = max(3.0 * med, 0.15)
-    flagged = [
-        name
-        for i, name in enumerate(times)
-        if sentinels[i] > gate or sentinels[i + 1] > gate
-    ]
-
+    flagged, sentinel_med = flag_rows(list(times), sentinels)
     ok = {k: v for k, v in times.items() if v >= 0}
     result = {
         "metric": "sum_query_wall_sec",
@@ -225,6 +268,8 @@ def main() -> int:
         "n_failed": len(times) - len(ok),
         "runs_per_query": RUNS,
         "aggregation": "min",
+        "sentinel_flagged": flagged,
+        "sentinel_median_s": sentinel_med,
     }
     # Self-contained copy on disk FIRST (VERDICT r13 item 6): the driver's
     # BENCH_rN.json wrapper keeps only a 2000-char stdout tail, which loses
@@ -239,7 +284,13 @@ def main() -> int:
         ).stdout.strip()
     except Exception:
         head = None
-    full = dict(result, git_head=head, sf_dir=sf_dir)
+    full = dict(
+        result,
+        git_head=head,
+        sf_dir=sf_dir,
+        sentinels=[None if t is None else round(t, 4) for t in sentinels],
+        codegen_compiles=compiles,
+    )
     try:
         out = Path(__file__).parent / "bench" / "BENCH_FULL_latest.json"
         out.parent.mkdir(exist_ok=True)

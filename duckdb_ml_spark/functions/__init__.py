@@ -159,17 +159,12 @@ def ml_train(
     cfg = config if isinstance(config, nn.TrainingConfig) else nn.TrainingConfig.from_json(config)
     model = registry.get_model(name)
     xy = df.select(F.col(features_col).alias("__x"), F.col(targets_col).alias("__y"))
-    try:
-        # Arrow-native collect: list columns land as ListArrays whose flat
-        # child buffers reshape straight into the [n, dim] training matrices —
-        # no 600k-row pandas object column in between
-        tbl = xy.toArrow()
-        x = _arrow_list_to_matrix(tbl.column("__x"), model.spec.input_dim, "features")
-        y = _arrow_list_to_matrix(tbl.column("__y"), model.spec.output_dim, "targets")
-    except AttributeError:  # Spark < 4.0: no DataFrame.toArrow
-        pdf = xy.toPandas()
-        x = _as_matrix(pdf["__x"], model.spec.input_dim, "features")
-        y = _as_matrix(pdf["__y"], model.spec.output_dim, "targets")
+    # Arrow-native collect: list columns land as ListArrays whose flat child
+    # buffers reshape straight into the [n, dim] training matrices — no
+    # 600k-row pandas object column in between
+    tbl = xy.toArrow()
+    x = _arrow_list_to_matrix(tbl.column("__x"), model.spec.input_dim, "features")
+    y = _arrow_list_to_matrix(tbl.column("__y"), model.spec.output_dim, "targets")
     params = [{k: v.copy() for k, v in p.items()} for p in model.params]
     nn.train_reg(model.spec, params, x, y, cfg, log=log)
     model.params = params

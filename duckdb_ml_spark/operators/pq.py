@@ -80,10 +80,13 @@ def train_pq_codebooks(X, m: int = PQ_M, k: int = PQ_K, seed: int = PQ_SEED,
             # (n, k) squared distances; argmin ties -> lowest index
             d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             a = np.argmin(d2, axis=1)
-            for j in range(k):
-                mask = a == j
-                if mask.any():
-                    C[j] = sub[mask].mean(axis=0)
+            # per-centroid means from bincount sums: each sum accumulates its
+            # points in row order, as sub[a == j].mean(axis=0) does, so the
+            # codebooks are byte-identical to the per-centroid loop's
+            cnt = np.bincount(a, minlength=k)
+            hit = cnt > 0
+            for c in range(dsub):
+                C[hit, c] = np.bincount(a, weights=sub[:, c], minlength=k)[hit] / cnt[hit]
         books[s] = C
     return books
 

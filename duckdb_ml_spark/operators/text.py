@@ -1046,10 +1046,17 @@ def countmin_topk_audit(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFr
         .agg(F.sum("n_exact").alias("c"))
     )
 
+    # one projection over the top-k, each bucket inlining the hash (two md5s
+    # per top row, k rows). A separate __h column stays its own projection
+    # between the limit and its sort (CollapseProject will not duplicate the
+    # md5), so the pair planned as a codegen'd GlobalLimit, whose generated
+    # counter name is fresh at every planning: the row compiled 4 new
+    # classes on every call. Limit(Project(Sort)) plans as one
+    # TakeOrderedAndProject instead.
     top = wc.orderBy(F.desc("n_exact"), F.asc("w")).limit(k)
-    top = top.withColumn("__h", _cm_hash(F.col("w")))
-    for i, b in enumerate(_cm_buckets(F.col("__h"))):
-        top = top.withColumn(f"__b{i}", b)
+    buckets = _cm_buckets(_cm_hash(F.col("w")))
+    top = top.select("w", "n_exact", *[b.alias(f"__b{i}") for i, b in enumerate(buckets)])
+    for i in range(len(buckets)):
         c_i = cm.where(F.col("r") == i).select(
             F.col("b").alias(f"__b{i}"), F.col("c").alias(f"__c{i}")
         )

@@ -7,7 +7,11 @@ every setting is chosen to also be the right default on a large cluster:
 - Arrow on (pandas_udf / mapInPandas hot paths are Arrow-batched);
 - shuffle partitions sized for the local rig via env, overridable per-cluster;
 - UTC session timezone so timestamp semantics match naive-UTC parquet and the
-  DuckDB oracle regardless of host timezone.
+  DuckDB oracle regardless of host timezone;
+- a generated-code cache of CODEGEN_CACHE_ENTRIES (4096) classes instead of
+  Spark's 100, so a session's repeated queries reuse their compiled classes:
+  the 172 registry rows at sf0.01 generate 1,403 distinct classes, and at the
+  default cap each warm benchmark pass recompiled 207-229 of them.
 """
 
 from __future__ import annotations
@@ -30,6 +34,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # this is the standard "size your shuffle to your data" production tuning,
 # applied automatically instead of by hand.
 COMPACT_INPUT_BYTES = 2 << 30
+
+# Size of Spark's generated-class cache (static conf
+# spark.sql.codegen.cache.maxEntries; Spark's default is 100). The working set
+# follows the number of distinct plans a session runs, not the data size, so
+# compact and cluster sessions use the same value. Measured on 4 cores at
+# sf0.01: the 172 registry rows generate 1,403 distinct classes (mean 2.7 KB
+# of bytecode). At the default cap the LRU evicted classes before their reuse:
+# 207-229 recompiles per timed pass of the benchmark's warm_session workload,
+# 25-66 per pipeline_cold pass, and 1,586 (12.7 s of Janino time) in a second
+# full-registry cycle. At this cap: 0 in every timed pass after the first, and
+# 4 in the second cycle (NOTES.md lists them); warm_session's pass_s fell
+# 18-22% (15 of 15 parent/change pairs). JVM peak RSS: 2,967 vs 3,046 MiB at
+# the default cap after two registry cycles; single traced benchmark runs read
+# 1,596 vs 1,404 MiB (warm_session) and 1,334 vs 1,472 MiB (pipeline_cold).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _dir_bytes(path: str) -> int:
@@ -131,6 +150,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # No console progress bar: its carriage-return repaints interleave
         # with stdout when a harness captures both streams, which corrupted
         # the one-line JSON contract bench.py prints (BENCH_r02..r13 all
@@ -139,6 +159,19 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(compilations, compile_ms) of generated classes so far in this JVM.
+
+    Cumulative since JVM start and shared by every session in it; take the
+    difference of two readings to count one span's codegen-cache misses (a
+    cache hit compiles nothing). The count is CodegenMetrics' compilation-time
+    histogram count, the time CodeGenerator's compile-time accumulator."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), nanos / 1e6
 
 
 _SHIPPED_CONTEXTS: set[int] = set()
@@ -181,7 +214,9 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
 
     The driver harness constructs its own SparkSession; only conf keys that are
     runtime-mutable are set here (timezone matters for timestamp queries vs the
-    naive-UTC DuckDB oracle).
+    naive-UTC DuckDB oracle). Static confs such as the codegen cache size
+    (CODEGEN_CACHE_ENTRIES) are fixed when the JVM's first session starts and
+    cannot be applied here; such a session keeps Spark's 100-class cache.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:

@@ -1023,6 +1023,55 @@ def test_pq_codebooks_deterministic_and_shaped():
     assert not np.array_equal(b1, b3)
 
 
+def _pq_codebooks_reference(X, m, k, seed, iters):
+    """The per-centroid Lloyd update train_pq_codebooks replaced (kept as the
+    byte-identity reference for its bincount form)."""
+    import numpy as np
+
+    n, d = X.shape
+    dsub = d // m
+    k = min(k, n)
+    rs = np.random.RandomState(seed)
+    books = np.empty((m, k, dsub))
+    for s in range(m):
+        sub = X[:, s * dsub:(s + 1) * dsub]
+        C = sub[rs.permutation(n)[:k]].copy()
+        for _ in range(iters):
+            d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            a = np.argmin(d2, axis=1)
+            for j in range(k):
+                mask = a == j
+                if mask.any():
+                    C[j] = sub[mask].mean(axis=0)
+        books[s] = C
+    return books
+
+
+@pytest.mark.parametrize(
+    "n,m,distinct",
+    [
+        (500, 16, None),  # pq serving (PQ_M)
+        (500, 32, None),  # IVF-PQ residual codebooks (IVFPQ_M)
+        (2000, 16, None),
+        (37, 16, None),  # k clamped to n
+        (300, 16, 40),  # duplicate rows: empty clusters keep their centroid
+    ],
+)
+def test_pq_codebooks_byte_identical_to_loop_reference(n, m, distinct):
+    import numpy as np
+
+    from duckdb_ml_spark.operators.pq import PQ_ITERS, PQ_K, PQ_SEED, train_pq_codebooks
+
+    rs = np.random.RandomState(n + m)
+    X = rs.randn(distinct or n, 64)
+    if distinct:
+        X = X[rs.randint(0, distinct, n)]
+    got = train_pq_codebooks(X, m=m)
+    want = _pq_codebooks_reference(X, m, PQ_K, PQ_SEED, PQ_ITERS)
+    assert got.shape == (m, min(PQ_K, n), 64 // m)
+    assert got.tobytes() == want.tobytes()
+
+
 def test_pq_encode_matches_numpy_argmin(spark, sf_dir):
     import numpy as np
 
