@@ -101,3 +101,24 @@ def test_checkledger_md_exists():
     assert (REPO / "CHECKLEDGER.md").exists(), (
         "run tools/check_ledger.py and commit CHECKLEDGER.md"
     )
+
+
+def test_uncommitted_module_edit_counts_as_touched(monkeypatch):
+    """A registry module with working-tree or index changes is touched now,
+    so its rows are stale before the edit is committed — the gate must see
+    a plan change in the change that makes it, not one commit later."""
+    import check_ledger
+
+    target = "duckdb_ml_spark/operators/similarity.py"
+    real_git = check_ledger._git
+
+    def fake_git(*args: str) -> str:
+        if args[0] == "status":
+            return f" M {target}" if args[-1] == target else ""
+        return real_git(*args)
+
+    monkeypatch.setattr(check_ledger, "_git", fake_git)
+    rows = [r for r in check_ledger.build_ledger()["rows"] if r["module"] == target]
+    assert rows, f"no registry rows found for {target}"
+    assert all(r["stale"] for r in rows), [r["query"] for r in rows if not r["stale"]]
+    assert {r["module_commit"] for r in rows} == {"uncommitted"}

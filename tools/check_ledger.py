@@ -5,11 +5,14 @@ For every registered query, records:
   - the last round in which the driver hash-checked it green
     (CORRECTNESS_r*.json, hash_match; rows_match for no-oracle rows),
   - the module that registers it,
-  - the last commit touching that module,
+  - the last commit touching that module (or "uncommitted", dated now,
+    while the module has working-tree or index changes),
 and flags STALE any query whose registering module was committed to AFTER
 its last driver-green round (i.e. the driver has never hashed the current
-plan).  The module is the granularity the engine actually changes at — a
-touch marks every query in the file, which over-approximates staleness in
+plan).  Counting an uncommitted edit as a touch makes the gate fail on the
+edit itself, before it lands, rather than only on the commit after it.
+The module is the granularity the engine actually changes at — a touch
+marks every query in the file, which over-approximates staleness in
 exactly the conservative direction a freshness gate wants.
 
 Output: CHECKLEDGER.md at the repo root (one row per query) plus a JSON
@@ -27,6 +30,7 @@ import os
 import re
 import subprocess
 import sys
+from datetime import datetime, timezone
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -42,8 +46,8 @@ WINDOW_SLOTS = 50  # the driver checks the first 50 queries() entries
 # re-enters them into the rotation automatically (ADVICE r12: an
 # unconditional exemption would let a future canary plan edit bypass the
 # freshness gate forever). The pinned fingerprints are checked at ledger
-# build time via the canary module's own CANARY_FINGERPRINT, which hashes
-# each sentinel's (plan source, oracle SQL) pair.
+# build time against canary_fingerprints() below, which hashes each
+# sentinel's (plan source, oracle SQL) pair.
 EXEMPT_ENV_SENTINELS = frozenset(
     {
         "canary_ts_raw",
@@ -55,9 +59,9 @@ EXEMPT_ENV_SENTINELS = frozenset(
 )
 
 # sha256(plan builder source + oracle SQL) of each sentinel at its last
-# driver-green round (r8, CORRECTNESS_r08/r09). Regenerate with
-# `python tools/check_ledger.py --canary-fp` AFTER a sentinel goes
-# driver-green again — never alongside the edit itself.
+# driver-green round (r8, CORRECTNESS_r08/r09). Regenerate from
+# canary_fingerprints() AFTER a sentinel goes driver-green again — never
+# alongside the edit itself.
 _CANARY_PINNED_FP = {
     "canary_ts_raw": "1a37f2197cb44d1a",
     "canary_ts_epoch_us": "2e2de712c276ad98",
@@ -180,6 +184,13 @@ def last_green() -> dict[str, tuple[int, str]]:
 
 
 def module_last_commit(rel: str) -> tuple[str, str]:
+    """(short hash, ISO date) of the module's last change.
+
+    A module with working-tree or index changes counts as touched now: the
+    edit is part of the change being made, so its rows must already be
+    windowed or carried before it is committed, not only after."""
+    if _git("status", "--porcelain", "--", rel):
+        return "uncommitted", datetime.now(timezone.utc).isoformat(timespec="seconds")
     out = _git("log", "-1", "--format=%h|%cI", "--", rel)
     h, _, d = out.partition("|")
     return h, d
@@ -206,8 +217,6 @@ def build_ledger() -> dict:
         # offsets mis-order lexicographically ('...T02:00-07:00' sorts before
         # '...T05:00+00:00' although it is 4h later), which would mark a
         # plan-touching non-UTC commit fresh
-        from datetime import datetime
-
         stale = bool(commit_d) and (
             not checked_date
             or datetime.fromisoformat(commit_d) > datetime.fromisoformat(checked_date)
@@ -244,8 +253,9 @@ def write_md(ledger: dict) -> None:
         "",
         "A query is STALE when its registering module's last commit postdates the",
         "round of its last driver-green check — the driver has never hashed the",
-        "current plan. tests/test_check_ledger.py asserts every stale query is in",
-        "the declared next driver window (or explicitly carried over).",
+        "current plan; an uncommitted edit to the module counts as a commit made",
+        "now. tests/test_check_ledger.py asserts every stale query is in the",
+        "declared next driver window (or explicitly carried over).",
         "",
         "| query | module | last green | kind | module commit | stale | in r-window |",
         "|---|---|---|---|---|---|---|",
