@@ -204,6 +204,7 @@ def main() -> int:
     # methodology for the queries themselves is UNCHANGED (same timed action,
     # same min-of-N, the sentinel runs outside every timing window). A failing
     # sentinel or GC call is logged and skipped, never fatal.
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.session import codegen_stats
 
     def _sentinel() -> float | None:
@@ -236,9 +237,12 @@ def main() -> int:
     times: dict[str, float] = {}
     # generated classes compiled while a row ran (codegen-cache misses)
     compiles: dict[str, int | None] = {}
+    # memo hits, misses and build seconds a row's runs added
+    memo_deltas: dict[str, dict] = {}
     for name, fn in qs.items():
         best = -1.0
         c0 = _compiled()
+        m0 = memo.stats()
         for _ in range(max(RUNS, 5) if name in HIGH_VARIANCE_ROWS else RUNS):
             t0 = time.perf_counter()
             try:
@@ -253,6 +257,10 @@ def main() -> int:
                 _settle()  # between runs, t already captured
         c1 = _compiled()
         compiles[name] = None if c0 is None or c1 is None else c1 - c0
+        m1 = memo.stats()
+        memo_deltas[name] = {
+            k: round(m1[k] - m0[k], 3) for k in ("hits", "misses", "build_s")
+        }
         times[name] = round(best, 3) if best >= 0 else -1.0
         sentinels.append(_sentinel())
 
@@ -290,6 +298,7 @@ def main() -> int:
         sf_dir=sf_dir,
         sentinels=[None if t is None else round(t, 4) for t in sentinels],
         codegen_compiles=compiles,
+        memo=memo_deltas,
     )
     try:
         out = Path(__file__).parent / "bench" / "BENCH_FULL_latest.json"

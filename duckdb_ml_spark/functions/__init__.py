@@ -4,7 +4,7 @@ Architecture (the key correction over the reference, SURVEY §4.1): `ml_create`,
 `ml_train`, `ml_list` are DRIVER-side API calls — they mutate the model registry
 and the filesystem, which must never happen inside a Spark UDF (task retries and
 speculation would re-run side effects). Only pure `ml_pred` runs on executors, as
-an Arrow `pandas_udf` over ArrayType(FloatType()) with closure-shipped weights —
+an Arrow `arrow_udf` over ArrayType(FloatType()) with closure-shipped weights —
 the exact analogue of the reference's vectorized scalar function
 (/root/reference/src/lib.rs:204-238).
 """
@@ -83,23 +83,6 @@ def _arrow_list_to_matrix(arr, expect_dim: int | None, what: str) -> np.ndarray:
         raise ValueError(f"{what}: expected length {expect_dim}, got {lens[0]}")
     flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
     return flat.reshape(n, int(lens[0]))
-
-
-def make_pred_udf(spec_json: str, params: list[dict[str, np.ndarray]]):
-    """Pure inference pandas_udf over a weights snapshot (Arrow-batched, JVM↔Arrow
-    transfer only — the Spark analogue of the 2048-row DuckDB chunk loop).
-    Used for the SQL-registered scalar form; the DataFrame API path (ml_pred)
-    uses the faster mapInArrow kernel."""
-    spec = parse_spec(spec_json)
-    in_dim = spec.input_dim
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def _pred(features: pd.Series) -> pd.Series:
-        x = _as_matrix(features, in_dim, "features")
-        out, _ = nn.forward(spec, params, x, training=False)
-        return pd.Series(list(out))
-
-    return _pred
 
 
 def ml_pred(df: DataFrame, name: str, features_col: str = "features", output_col: str = "prediction") -> DataFrame:

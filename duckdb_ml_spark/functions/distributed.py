@@ -22,6 +22,7 @@ data never leaves executors:
 
 from __future__ import annotations
 
+import functools
 import pickle
 from collections.abc import Iterator
 
@@ -359,12 +360,10 @@ def _grad_descent_sync(spark, xy, spec_json, init, cfg, in_dim, out_dim, momentu
     return params
 
 
-_SPEC_CACHE: dict[str, object] = {}
-
-
+@functools.cache
 def parse_spec_cached(spec_json: str):
+    """Parsed spec per JSON string — runs in executor Python workers, where
+    no session exists, so it is a plain parse cache, not a memo entry."""
     from duckdb_ml_spark.spec import parse_spec
 
-    if spec_json not in _SPEC_CACHE:
-        _SPEC_CACHE[spec_json] = parse_spec(spec_json)
-    return _SPEC_CACHE[spec_json]
+    return parse_spec(spec_json)

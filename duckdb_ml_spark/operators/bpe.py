@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.operators.textnorm import tokens
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
@@ -171,26 +172,13 @@ def bpe_token_counts(
     )
 
 
-_MERGE_CACHE: dict = {}
-
-
-def _merges_for(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    """Merge table of sf_dir's documents corpus — a dataset property, memoized
-    like embedding_dim / collect_matrix."""
-    merges = _MERGE_CACHE.get(sf_dir)
-    if merges is None:
-        merges = train_bpe_merges(load(spark, sf_dir, "documents"))
-        _MERGE_CACHE[sf_dir] = merges
-    return merges
-
-
 def bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(merge_rank, lhs, rhs) — the learned merge table itself, in application
     order. THE driver-checkable face of BPE training (VERDICT r3 item 3): the
     merge list is a deterministic pure function of the corpus (count ties break
     lexicographically), so it pairs with an exact golden oracle, unlike the
     per-doc encode output."""
-    merges = _merges_for(spark, sf_dir)
+    merges = budget_merges(spark, sf_dir, N_MERGES)
     return spark.createDataFrame(
         [(i, l, r) for i, (l, r) in enumerate(merges)],
         "merge_rank int, lhs string, rhs string",
@@ -394,23 +382,15 @@ def _bpe_token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape a tokenizer-cost survey runs). The merge table is a dataset property
     of sf_dir — memoized like embedding_dim / collect_matrix."""
     docs = load(spark, sf_dir, "documents")
-    merges = _MERGE_CACHE.get(sf_dir)
-    if merges is None:
-        merges = train_bpe_merges(docs)
-        _MERGE_CACHE[sf_dir] = merges
-    return bpe_token_counts(docs, merges)
+    return bpe_token_counts(docs, budget_merges(spark, sf_dir, N_MERGES))
 
 
 def budget_merges(spark: SparkSession, sf_dir: str, n_merges: int) -> list:
-    """Merge table at an explicit budget, cached per (sf_dir, budget) — the
-    ONE train-or-cache path shared by pack_sequences_bpe and
-    text_bpe_counts_budget (previously duplicated line-for-line)."""
-    key = (sf_dir, n_merges)
-    merges = _MERGE_CACHE.get(key)
-    if merges is None:
-        merges = train_bpe_merges(load(spark, sf_dir, "documents"), n_merges=n_merges)
-        _MERGE_CACHE[key] = merges
-    return merges
+    """Merge table at a budget, memoized per (session, sf_dir, budget) — the
+    ONE train-or-cache path shared by bpe_merge_table, text_bpe_real,
+    pack_sequences_bpe and text_bpe_counts_budget."""
+    return memo(spark, (sf_dir, "bpe_merges", n_merges), lambda: train_bpe_merges(
+        load(spark, sf_dir, "documents"), n_merges=n_merges))
 
 
 def lexicon_count_ctes(lexicon: tuple) -> str:

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.operators.textnorm import (
     exploded_shingles,
     norm_text,
@@ -332,54 +333,30 @@ def _dedup_incremental_oracle() -> str:
 MAX_COLLECT_DOCS = 65536  # signature-collect gate: k·8 B/doc → ≤ ~9 MB driver
 
 
-_SIG_CACHE: dict = {}
-# editdist prefix-table checkpoints, keyed (session, sf_dir, prefix_len) —
-# same immutable-corpus memo contract as _SIG_CACHE (r14 regression probe)
-_EDITDIST_PFX_CACHE: dict = {}
-# single-session reset (ADVICE r14): id(spark) keys are unbounded in a
-# long-lived driver that cycles sessions, and CPython id() reuse after GC
-# could resurrect a DEAD session's entry (for _EDITDIST_PFX_CACHE that is a
-# localCheckpointed DataFrame pinned to the dead JVM state) — so when a new
-# session id appears, both session-keyed caches reset wholesale, the same
-# pattern as __spark_entry__._PLAN_CACHE. Alternating-session workloads
-# re-pay the memo build, never correctness.
-_SESSION_CACHE_ID: list = [None]
-
-
-def _reset_session_caches(spark: SparkSession) -> None:
-    sid = id(spark)
-    if _SESSION_CACHE_ID[0] != sid:
-        _SIG_CACHE.clear()
-        _EDITDIST_PFX_CACHE.clear()
-        _SESSION_CACHE_ID[0] = sid
-
-
 def _collect_signatures(spark: SparkSession, sf_dir: str):
     """(ids, k-col minhash matrix) via ONE bounded collect of the signature
     relation — the driver-side twin of collect_matrix for embeddings. Returns
     None above the gate (at 100 TB signatures are a checkpointed TABLE, not a
     collectable; callers then use the banded shuffle plans).
 
-    Memoized per (session, sf_dir) — the signatures of an immutable corpus
-    are a dataset property, the same cache contract as collect_matrix /
-    corpus_shingles / _MERGE_CACHE: six queries (clusters, keep_docs,
+    Memoized per (session, sf_dir) — the signatures of a corpus are a
+    dataset property, like collect_matrix / corpus_shingles /
+    bpe.budget_merges: six queries (clusters, keep_docs,
     keep_best, lsh_pairs, ngram_jaccard, tfidf_rescore) consume the SAME
     signature table, which is exactly the precomputed artifact the 100 TB
     docstring above describes."""
+    return memo(spark, (sf_dir, "minhash_sigs"), lambda: _build_signatures(spark, sf_dir))
+
+
+def _build_signatures(spark: SparkSession, sf_dir: str):
     import numpy as np
 
-    _reset_session_caches(spark)
-    key = (id(spark), sf_dir)
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
     docs = load(spark, sf_dir, "documents")
     if _cached_count(docs, (sf_dir, "documents", "rowcount")) > MAX_COLLECT_DOCS:
-        _SIG_CACHE[key] = None
         return None
     rows = minhash_signatures(docs).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mh = np.array([[r[i + 1] for i in range(MINHASH_K)] for r in rows], dtype=np.int64)
-    _SIG_CACHE[key] = (ids, mh)
     return ids, mh
 
 
@@ -1045,18 +1022,10 @@ def embedding_lsh_candidates(
     return out.distinct() if dedup else out
 
 
-_COUNT_CACHE: dict = {}
-
-
 def _cached_count(df: DataFrame, cache_key=None) -> int:
-    """Row count memoized per immutable source (a dataset property, like
-    embedding_dim) — strategy switches shouldn't pay a count job per query."""
-    if cache_key is not None and cache_key in _COUNT_CACHE:
-        return _COUNT_CACHE[cache_key]
-    n = df.count()
-    if cache_key is not None:
-        _COUNT_CACHE[cache_key] = n
-    return n
+    """Row count memoized per source (a dataset property, like embedding_dim)
+    — strategy switches shouldn't pay a count job per query."""
+    return memo(df.sparkSession, (cache_key, "count"), df.count)
 
 
 def verify_pairs_cosine(
@@ -1086,7 +1055,7 @@ def verify_pairs_cosine(
         from duckdb_ml_spark.operators.vec import collect_matrix
 
         ids, M = collect_matrix(
-            emb, id_col, cache_key=None if cache_key is None else (cache_key, "corpus")
+            emb, id_col, cache_key=(cache_key, "corpus")
         )
         bc = emb.sparkSession.sparkContext.broadcast((ids, M))
 
@@ -1490,7 +1459,7 @@ def semantic_dedup(
         cent_ids, CM = collect_matrix(
             emb.where(F.col(id_col) % stride == 0),
             id_col,
-            cache_key=None if cache_key is None else (cache_key, "sem_cent", stride),
+            cache_key=(cache_key, "sem_cent", stride),
         )
         order = np.argsort(cent_ids)  # c_id ASC → argmax first-max == lowest c_id on ties
         cent_ids, CM = cent_ids[order], CM[order]
@@ -1611,7 +1580,7 @@ def _semantic_sampled_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").where(
         F.col("vec_id") % SEM_SAMPLE_MOD == 0
     )
-    return semantic_dedup(emb, cache_key=f"{sf_dir}#sem{SEM_SAMPLE_MOD}")
+    return semantic_dedup(emb, cache_key=(sf_dir, f"sem{SEM_SAMPLE_MOD}"))
 
 
 _SEMANTIC_ORACLE = f"""
@@ -1732,16 +1701,16 @@ def editdist_verify_lsh(
     are the block key that stays candidate-bounded at 100 TB.
 
     Candidate branch mirrors ngram_jaccard_pairs: bounded corpora collect the
-    shared signature table once (memoized _SIG_CACHE) and band on the driver;
+    shared signature table once (memoized) and band on the driver;
     above the gate the banded self-join plan generates candidates lazily and
     only the prefix join + verify run distributed.
 
-    r14 regression probe (sf0.1 0.64 s → 0.93 s after the r13 _SIG_CACHE
-    refactor): the steady-state cost was TWO filtered scans of the documents
+    r14 regression probe (sf0.1 0.64 s → 0.93 s after the r13 signature
+    memo): the steady-state cost was TWO filtered scans of the documents
     text column per run (one per join side). The candidate ids of an
     immutable corpus are a dataset property, so the bounded branch now
     localCheckpoints the ~|ids|-row prefix table once per (session, sf_dir)
-    — the same memo contract as _SIG_CACHE — and both join sides read the
+    — the same memo as the signatures — and both join sides read the
     materialized rows: 0.88 s → 0.60 s min-of-3 (prefix-inline driver
     variant falsified at 0.96 s, bench/EDITDIST_PROBE_r14.json)."""
     docs = load(spark, sf_dir, "documents")
@@ -1754,16 +1723,11 @@ def editdist_verify_lsh(
     if rows is not None:
         cand = spark.createDataFrame(rows or [], "doc_a bigint, doc_b bigint")
         ids = sorted({a for a, _ in rows} | {b for _, b in rows})
-        _reset_session_caches(spark)
-        pkey = (id(spark), sf_dir, prefix_len)
-        p = _EDITDIST_PFX_CACHE.get(pkey)
-        if p is None:
-            p = (
-                docs.where(F.col("doc_id").isin(ids) if ids else F.lit(False))
-                .select("doc_id", F.substring("text", 1, prefix_len).alias("pfx"))
-                .localCheckpoint()
-            )
-            _EDITDIST_PFX_CACHE[pkey] = p
+        p = memo(spark, (sf_dir, "editdist_pfx", prefix_len), lambda: (
+            docs.where(F.col("doc_id").isin(ids) if ids else F.lit(False))
+            .select("doc_id", F.substring("text", 1, prefix_len).alias("pfx"))
+            .localCheckpoint()
+        ))
     else:  # unbounded: lazy banded candidates, no driver materialization
         cand = lsh_candidate_pairs(minhash_signatures(docs))
         p = docs.select(

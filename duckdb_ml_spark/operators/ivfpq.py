@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -118,13 +119,14 @@ demb AS (
 )"""
 
 
-# (sf_dir) → (CM centroid matrix, books) — index-build artifacts, cached per
-# dataset like the IVF centroid table / PQ codebooks (cold build collects →
-# the query is in __spark_entry__._EXEC_AT_BUILD)
-_ART_CACHE: dict = {}
-
-
 def ivfpq_artifacts(spark: SparkSession, sf_dir: str):
+    """(CM centroid matrix, books) — index-build artifacts, memoized per
+    dataset like the IVF centroid table / PQ codebooks (cold build collects →
+    the query is in __spark_entry__._EXEC_AT_BUILD)."""
+    return memo(spark, (sf_dir, "ivfpq_art"), lambda: _build_artifacts(spark, sf_dir))
+
+
+def _build_artifacts(spark: SparkSession, sf_dir: str):
     import numpy as np
 
     from duckdb_ml_spark.operators.pq import PQ_TRAIN_CAP, train_pq_codebooks
@@ -132,27 +134,23 @@ def ivfpq_artifacts(spark: SparkSession, sf_dir: str):
     from duckdb_ml_spark.operators.vec import collect_matrix
     from duckdb_ml_spark.operators.dedup import _cached_count
 
-    art = _ART_CACHE.get(sf_dir)
-    if art is None:
-        emb = load(spark, sf_dir, "embeddings")
-        demb = derived_embeddings(emb)
-        _, CM = kmeans_centroids(demb, k=CLUSTER_C, seed=42)
-        n = _cached_count(emb, sf_dir)
-        stride = max(1, -(-n // PQ_TRAIN_CAP))
-        sample = demb.where(F.col("vec_id") % stride == 0) if stride > 1 else demb
-        ids, X = collect_matrix(sample, "vec_id", cache_key=(sf_dir, "ivfpq_train", stride))
-        # id-sorted training sample → layout-independent codebooks (ADVICE r4)
-        order = np.argsort(ids, kind="stable")
-        Xs = X[order]
-        # RESIDUAL training (IVFADC): codebooks learn x − centroid(bucket),
-        # with the sample assigned by the same cosine-argmax the kernels use
-        from duckdb_ml_spark.operators.vec import _seq_cosine_matrix
+    emb = load(spark, sf_dir, "embeddings")
+    demb = derived_embeddings(emb)
+    _, CM = kmeans_centroids(demb, k=CLUSTER_C, seed=42)
+    n = _cached_count(emb, sf_dir)
+    stride = max(1, -(-n // PQ_TRAIN_CAP))
+    sample = demb.where(F.col("vec_id") % stride == 0) if stride > 1 else demb
+    ids, X = collect_matrix(sample, "vec_id")  # used once: the artifacts are memoized
+    # id-sorted training sample → layout-independent codebooks (ADVICE r4)
+    order = np.argsort(ids, kind="stable")
+    Xs = X[order]
+    # RESIDUAL training (IVFADC): codebooks learn x − centroid(bucket),
+    # with the sample assigned by the same cosine-argmax the kernels use
+    from duckdb_ml_spark.operators.vec import _seq_cosine_matrix
 
-        b = np.argmax(_seq_cosine_matrix(Xs, CM), axis=1)
-        books = train_pq_codebooks(Xs - CM[b], m=IVFPQ_M)
-        art = (CM, books)
-        _ART_CACHE[sf_dir] = art
-    return art
+    b = np.argmax(_seq_cosine_matrix(Xs, CM), axis=1)
+    books = train_pq_codebooks(Xs - CM[b], m=IVFPQ_M)
+    return CM, books
 
 
 def _query_probes(Q, CM, nprobe: int = IVFPQ_NPROBE):

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.operators.textnorm import exploded_shingles, tokens, tokens_sql
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
@@ -42,9 +43,8 @@ PACK_CAPACITY = 256  # tokens per pack
 # full relation. localCheckpoint(eager) materializes (doc_id, shingle) to
 # executor storage once per (session, sf_dir); at 100 TB this is the
 # precomputed n-gram index every production decontam pipeline maintains as a
-# table — a dataset property, same cache contract as collect_matrix /
-# _MERGE_CACHE (builders that hit it cold are listed in _EXEC_AT_BUILD).
-_SHINGLE_CACHE: dict = {}
+# table — a dataset property, memoized like collect_matrix / the BPE merge
+# table (builders that hit it cold are listed in _EXEC_AT_BUILD).
 
 
 # Above this doc count the shingle relation is NOT localCheckpoint'ed:
@@ -67,15 +67,14 @@ SHINGLE_CHECKPOINT_DOC_GATE = 1_000_000
 def corpus_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     from duckdb_ml_spark.operators.dedup import _cached_count
 
-    key = (id(spark), sf_dir, n)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
         df = exploded_shingles(docs, n=n)
         if _cached_count(docs, (sf_dir, "documents", "rowcount")) <= SHINGLE_CHECKPOINT_DOC_GATE:
             df = df.localCheckpoint(eager=True)
-        _SHINGLE_CACHE[key] = df
-    return df
+        return df
+
+    return memo(spark, (sf_dir, "shingles", n), build)
 
 
 # Above this corpus doc count the decontam/containment eval-gram side is no
@@ -728,6 +727,17 @@ SELECT doc_id, source, n_tokens, pack_id FROM r
 # --- pack utilization rollup -------------------------------------------------
 
 
+def fill_ratio_sql(n_tokens: str, n_packs: str, div: str, capacity: int = PACK_CAPACITY) -> str:
+    """fill_ratio = n_tokens / (n_packs·capacity), rounded half-up to 6
+    decimals in exact integer arithmetic (`div`: Spark's `DIV`, DuckDB's
+    `//`), then divided by 1e6 — one correctly rounded IEEE division, so both
+    engines produce the same double. Rounding the double quotient instead
+    diverged on exact decimal ties: 1282/(5·256) = 1.0015625 rounded to
+    1.001563 in Spark and to 1.001562 in DuckDB."""
+    d = f"(CAST({n_packs} AS BIGINT) * {capacity})"
+    return f"CAST((2000000 * CAST({n_tokens} AS BIGINT) + {d}) {div} (2 * {d}) AS DOUBLE) / 1e6"
+
+
 def pack_stats(packed: DataFrame, capacity: int = PACK_CAPACITY) -> DataFrame:
     """Per-shard pack utilization: packs, docs, tokens, mean fill. The rollup
     a pipeline operator reports to size capacity (too small → fragmentation,
@@ -744,7 +754,7 @@ def pack_stats(packed: DataFrame, capacity: int = PACK_CAPACITY) -> DataFrame:
             "n_packs",
             "n_docs",
             "n_tokens",
-            F.round(F.col("n_tokens") / (F.col("n_packs") * capacity), 6).alias("fill_ratio"),
+            F.expr(fill_ratio_sql("n_tokens", "n_packs", "DIV", capacity)).alias("fill_ratio"),
         )
     )
 
@@ -769,7 +779,7 @@ SELECT source,
        (max(pack_id) + 1)::BIGINT AS n_packs,
        count(*)::BIGINT AS n_docs,
        sum(n_tokens)::BIGINT AS n_tokens,
-       round(sum(n_tokens)::DOUBLE / ((max(pack_id) + 1) * {PACK_CAPACITY}), 6) AS fill_ratio
+       {fill_ratio_sql("sum(n_tokens)", "max(pack_id) + 1", "//")} AS fill_ratio
 FROM p GROUP BY source
 """
 
@@ -965,7 +975,7 @@ SELECT source,
        max(pack_id) + 1 AS n_packs,
        count(1) AS n_docs,
        sum(n_tokens) AS n_tokens,
-       round(sum(n_tokens) / ((max(pack_id) + 1) * {PACK_CAPACITY}), 6) AS fill_ratio
+       {fill_ratio_sql("sum(n_tokens)", "max(pack_id) + 1", "DIV")} AS fill_ratio
 FROM p GROUP BY source
 """
 
@@ -1028,7 +1038,7 @@ SELECT source,
        (max(pack_id) + 1)::BIGINT AS n_packs,
        count(*)::BIGINT AS n_docs,
        sum(n_tokens)::BIGINT AS n_tokens,
-       round(sum(n_tokens)::DOUBLE / ((max(pack_id) + 1) * {PACK_CAPACITY}), 6) AS fill_ratio
+       {fill_ratio_sql("sum(n_tokens)", "max(pack_id) + 1", "//")} AS fill_ratio
 FROM p GROUP BY source
 """
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -91,34 +92,32 @@ def train_pq_codebooks(X, m: int = PQ_M, k: int = PQ_K, seed: int = PQ_SEED,
     return books
 
 
-_CODEBOOK_CACHE: dict = {}
-
-
 def pq_codebooks_for(spark: SparkSession, sf_dir: str):
     """Train-once codebooks per sf_dir (dataset artifact, like the IVF
     centroid table). Training sample: vec_id stride so the collect stays
     under PQ_TRAIN_CAP rows regardless of corpus size."""
+    return memo(
+        spark, (sf_dir, "pq_codebooks", PQ_M, PQ_K, PQ_SEED),
+        lambda: _train_codebooks_for(spark, sf_dir),
+    )
+
+
+def _train_codebooks_for(spark: SparkSession, sf_dir: str):
+    import numpy as np
+
     from duckdb_ml_spark.operators.dedup import _cached_count
     from duckdb_ml_spark.operators.vec import collect_matrix
 
-    key = (sf_dir, PQ_M, PQ_K, PQ_SEED)
-    books = _CODEBOOK_CACHE.get(key)
-    if books is None:
-        emb = load(spark, sf_dir, "embeddings")
-        n = _cached_count(emb, sf_dir)
-        stride = max(1, -(-n // PQ_TRAIN_CAP))
-        sample = emb.where(F.col("vec_id") % stride == 0) if stride > 1 else emb
-        ids, X = collect_matrix(sample, "vec_id", cache_key=(sf_dir, "pq_train", stride))
-        # collect_matrix rows arrive in scan/partition order; k-means init
-        # seeds from row permutation, so unsorted input makes codebooks (and
-        # the exact-top-k oracle's empirical recall) layout-dependent. Sort by
-        # vec_id so codebooks are a pure function of the dataset (ADVICE r4).
-        import numpy as np
-
-        X = X[np.argsort(ids, kind="stable")]
-        books = train_pq_codebooks(X)
-        _CODEBOOK_CACHE[key] = books
-    return books
+    emb = load(spark, sf_dir, "embeddings")
+    n = _cached_count(emb, sf_dir)
+    stride = max(1, -(-n // PQ_TRAIN_CAP))
+    sample = emb.where(F.col("vec_id") % stride == 0) if stride > 1 else emb
+    ids, X = collect_matrix(sample, "vec_id")  # used once: the codebooks are memoized
+    # collect_matrix rows arrive in scan/partition order; k-means init
+    # seeds from row permutation, so unsorted input makes codebooks (and
+    # the exact-top-k oracle's empirical recall) layout-dependent. Sort by
+    # vec_id so codebooks are a pure function of the dataset (ADVICE r4).
+    return train_pq_codebooks(X[np.argsort(ids, kind="stable")])
 
 
 def _encode_batch(X, books):

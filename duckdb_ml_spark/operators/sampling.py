@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import drop, memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -562,7 +563,6 @@ FROM documents GROUP BY 1
 
 PSK_GROUP_GATE = 4096  # above this many groups the bounded top-k collect
 # (≤ groups·k rows) stops being bounded-by-design; fall back to the rank form
-_PSK_SIZES_CACHE: dict = {}
 
 
 def per_source_uniform_k(
@@ -622,10 +622,9 @@ def per_source_uniform_k(
     t = df.select(group_col, id_col).withColumn(
         "__h", hash_uint(F.col(id_col), salt, 15)
     )
-    skey = (cache_key, group_col, "psk_sizes")
-    sizes = _PSK_SIZES_CACHE.get(skey) if cache_key is not None else None
-    from_cache = sizes is not None
-    if sizes is None:
+    built: list = []
+
+    def group_sizes() -> dict:
         # gate probe rides the same agg: limit(GATE+1) short-circuits the
         # collect if the group column is high-cardinality
         rows = (
@@ -634,9 +633,12 @@ def per_source_uniform_k(
             .limit(PSK_GROUP_GATE + 1)
             .collect()
         )
-        sizes = {r[0]: r[1] for r in rows}
-        if cache_key is not None and len(sizes) <= PSK_GROUP_GATE:
-            _PSK_SIZES_CACHE[skey] = sizes
+        built.append(True)
+        return {r[0]: r[1] for r in rows}
+
+    skey = (cache_key, "psk_sizes", group_col)
+    sizes = memo(spark, skey, group_sizes, keep=lambda m: len(m) <= PSK_GROUP_GATE)
+    from_cache = not built
     if len(sizes) > PSK_GROUP_GATE:
         from duckdb_ml_spark.plans.orderstats import keyed_global_rank
 
@@ -719,7 +721,7 @@ def per_source_uniform_k(
         # so this deterministically catches grown groups — ADVICE r14).
         # Drop the entry and recompute from scratch (one retry; the fresh
         # map cannot be stale against the same scan).
-        _PSK_SIZES_CACHE.pop(skey, None)
+        drop(skey)
         return per_source_uniform_k(
             df, k=k, id_col=id_col, group_col=group_col, salt=salt,
             cache_key=cache_key,

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from duckdb_ml_spark.memo import memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -66,7 +67,7 @@ def brute_force_topk(
     from duckdb_ml_spark.operators.vec import collect_matrix, cosine_scores_vs_broadcast
 
     q_ids, Q = collect_matrix(
-        queries, id_col, cache_key=None if cache_key is None else (cache_key, "bf_queries")
+        queries, id_col, cache_key=(cache_key, "bf_queries")
     )
     scored = cosine_scores_vs_broadcast(emb, q_ids, Q, id_col).select(
         "query_id", F.col("row_id").alias("neighbor_id"), "cos"
@@ -155,14 +156,14 @@ def ivf_topk(
         cent_ids, CM = collect_matrix(
             emb.where(F.col(id_col) % stride == 0),
             id_col,
-            cache_key=None if cache_key is None else (cache_key, "ivf_cent", stride),
+            cache_key=(cache_key, "ivf_cent", stride),
         )
         order = np.argsort(cent_ids)  # deterministic c_id ASC tie-break base order
         cent_ids, CM = cent_ids[order], CM[order]
 
     # query probe lists: nprobe nearest centroids per query — driver NumPy
     q_ids, QM = collect_matrix(
-        queries, id_col, cache_key=None if cache_key is None else (cache_key, "ivf_queries")
+        queries, id_col, cache_key=(cache_key, "ivf_queries")
     )
     qc = _seq_cosine_matrix(QM, CM)
     probe_map: dict = {}  # bucket c_id → [(query_id, query matrix row), ...]
@@ -765,9 +766,6 @@ def build_ivf_index(
     open(marker, "w").close()
 
 
-_INDEX_CACHE: dict = {}
-
-
 def ivf_topk_from_index(
     spark: SparkSession,
     sf_dir: str,
@@ -792,19 +790,18 @@ def ivf_topk_from_index(
     )
 
     # a serving process holds the index open: centroid matrix + the assign
-    # table's file listing are loaded once per (session, path), not per query
-    ckey = (id(spark), path)
-    cached = _INDEX_CACHE.get(ckey)
-    if cached is None:
+    # table's file listing are loaded once per (session, sf_dir, path), not
+    # per query
+    def open_index():
         crows = spark.read.parquet(os.path.join(path, "centroids")).collect()
         crows.sort(key=lambda r: r.c_id)
-        cached = (
+        return (
             np.array([r.c_id for r in crows], dtype=np.int64),
             np.array([r.embedding for r in crows], dtype=np.float64),
             spark.read.parquet(os.path.join(path, "assign")),
         )
-        _INDEX_CACHE[ckey] = cached
-    cent_ids, CM, assign_df = cached
+
+    cent_ids, CM, assign_df = memo(spark, (sf_dir, "ivf_index", path), open_index)
     q_ids, QM = collect_matrix(
         queries, "vec_id", cache_key=(sf_dir, "ivf_queries")
     )
@@ -875,16 +872,9 @@ def tfidf_weights(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 # would otherwise re-execute the explode+groupBy lineage three times per run
 # (measured: 1.9 → 0.5 s exec). At 100 TB the inverted index is a maintained
 # table, exactly like corpus_shingles / the signature table.
-_TFIDF_CACHE: dict = {}
-
-
 def _tfidf_weights_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    df = _TFIDF_CACHE.get(key)
-    if df is None:
-        df = tfidf_weights(load(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-        _TFIDF_CACHE[key] = df
-    return df
+    return memo(spark, (sf_dir, "tfidf"), lambda: tfidf_weights(
+        load(spark, sf_dir, "documents")).localCheckpoint(eager=True))
 
 
 def _tfidf_rescore_q(spark: SparkSession, sf_dir: str) -> DataFrame:

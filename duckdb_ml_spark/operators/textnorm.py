@@ -85,14 +85,3 @@ def shingles(col, n: int = 3) -> Column:
     (see that docstring for why).
     """
     return shingles_from_tokens(tokens(col), n)
-
-
-def shingles_sql(expr: str, n: int = 3) -> str:
-    """DuckDB twin of shingles(): lateral generate_series over 1-based positions.
-
-    Usable as a FROM-clause fragment:
-        WITH toks AS (SELECT doc_id, {tokens_sql} AS w FROM documents)
-        SELECT doc_id, {gram} FROM toks, generate_series(1, len(w)-(n-1)) AS t(i)
-    """
-    gram = " || ' ' || ".join(f"w[i+{j}]" for j in range(n))
-    return gram

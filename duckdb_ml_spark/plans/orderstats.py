@@ -34,13 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# (cache_key, n_buckets) -> list[float] range bounds. Dataset artifact: at
-# 100 TB these are computed once per table/column and persisted next to the
-# data (same contract as _SIG_CACHE / the IVF centroid table). Builders that
-# may trigger the cold collect are listed in __spark_entry__._EXEC_AT_BUILD.
-# Keyed on n_buckets too (ADVICE r5): two callers sharing a cache_key at
-# different granularities must not silently share bounds.
-_BOUNDS_CACHE: dict = {}
+from duckdb_ml_spark.memo import memo
 
 # 64 range buckets: pass-2 of the exact-quantile form scans ~|needed|/B of
 # the data, so doubling B halves the pruned scan (measured 2.8 s → 2.15 s at
@@ -53,20 +47,25 @@ def value_range_bounds(
     df: DataFrame, value_col: str, n_buckets: int = DEFAULT_BUCKETS, cache_key=None
 ) -> list:
     """Global approx-quantile bucket bounds for `value_col` (one tiny job:
-    fixed-size GK sketch, map-side partials, (B-1)-element collect)."""
-    ck = None if cache_key is None else (cache_key, n_buckets)
-    if ck is not None and ck in _BOUNDS_CACHE:
-        return _BOUNDS_CACHE[ck]
-    probs = ", ".join(f"{i / n_buckets}D" for i in range(1, n_buckets))
-    row = df.select(
-        F.expr(f"approx_percentile({value_col}, array({probs}), 10000)").alias("b")
-    ).head()
-    # dedupe: heavy value skew can repeat a bound; duplicates would create
-    # empty buckets (harmless) but cost extra codegen comparisons
-    bounds = sorted(set(row["b"] or []))
-    if ck is not None:
-        _BOUNDS_CACHE[ck] = bounds
-    return bounds
+    fixed-size GK sketch, map-side partials, (B-1)-element collect).
+
+    With a cache_key the bounds are a memoized dataset artifact: at 100 TB
+    they are computed once per table/column and persisted next to the data
+    (like the signatures / the IVF centroid table). Builders that may
+    trigger the cold collect are listed in __spark_entry__._EXEC_AT_BUILD.
+    Keyed on n_buckets too (ADVICE r5): two callers sharing a cache_key at
+    different granularities must not silently share bounds."""
+
+    def sketch() -> list:
+        probs = ", ".join(f"{i / n_buckets}D" for i in range(1, n_buckets))
+        row = df.select(
+            F.expr(f"approx_percentile({value_col}, array({probs}), 10000)").alias("b")
+        ).head()
+        # dedupe: heavy value skew can repeat a bound; duplicates would create
+        # empty buckets (harmless) but cost extra codegen comparisons
+        return sorted(set(row["b"] or []))
+
+    return memo(df.sparkSession, (cache_key, "bounds", n_buckets), sketch)
 
 
 def quantile_cont_sorted(v, probs) -> list:
@@ -178,7 +177,7 @@ def keyed_global_rank(
     if mode == "auto":
         from duckdb_ml_spark.operators.dedup import _cached_count
 
-        n = _cached_count(df, cache_key) if cache_key is not None else df.count()
+        n = _cached_count(df, cache_key)
         mode = "window" if n <= RANK_WINDOW_GATE else "two_pass"
     if mode == "window":
         w = Window.partitionBy(key).orderBy(value_col, tiebreak_col)
@@ -256,7 +255,7 @@ def keyed_prefix_sum(
     if mode == "auto":
         from duckdb_ml_spark.operators.dedup import _cached_count
 
-        n = _cached_count(df, cache_key) if cache_key is not None else df.count()
+        n = _cached_count(df, cache_key)
         mode = "window" if n <= RANK_WINDOW_GATE else "two_pass"
     excl = Window.unboundedPreceding, -1
     if mode == "window":
@@ -629,7 +628,7 @@ def quantiles_wide(
     if mode == "auto":
         from duckdb_ml_spark.operators.dedup import _cached_count
 
-        n = _cached_count(df, cache_key) if cache_key is not None else df.count()
+        n = _cached_count(df, cache_key)
         mode = "kernel" if n <= QUANTILE_KERNEL_GATE else "distributed"
     if mode == "kernel":
         return group_quantiles_kernel(df, key, value_col, probs, out_names)
@@ -802,8 +801,7 @@ def winsorized_stats(
         # key discriminated from the UNFILTERED counts keyed_global_rank /
         # quantiles_wide cache (ADVICE r7 low: first caller seeded the shared
         # slot, so a NULL-bearing column could gate on the wrong row count)
-        ck = None if cache_key is None else (cache_key, "notnull", value_col)
-        n = _cached_count(df, ck) if ck is not None else df.count()
+        n = _cached_count(df, (cache_key, "notnull", value_col))
         mode = "kernel" if n <= WINSORIZE_KERNEL_GATE else "distributed"
     if mode == "kernel":
         import numpy as np

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import memo
+
 
 def salted_agg(
     df: DataFrame,
@@ -490,11 +492,6 @@ FROM events GROUP BY event_type
 HOT_KEY_ROWS = 1_000_000  # a key is hot when it would serialize ≥1M fact
 HOT_SAMPLE_FRACTION = 0.001  # rows onto one join task
 
-# hot-key lists are dataset properties of an immutable table (the same cache
-# contract as dedup._SIG_CACHE / corpus_shingles): keyed on caller-supplied
-# (sf_dir, table, key, threshold), so repeat builds skip the sample job
-_HOT_KEYS_CACHE: dict = {}
-
 
 def adaptive_salted_join(
     large: DataFrame,
@@ -534,18 +531,9 @@ def adaptive_salted_join(
     tools/bucketed_join_probe.py reproduces). Salting remains the tool for
     SKEWED keys; bucketing for repeated joins; they compose (bucket the
     uniform mass, salt the hot tail)."""
-    # sample_fraction is part of the key (ADVICE r8 low: omitting it let a
-    # later call with a different detection sensitivity silently reuse the
-    # stale hot-key list — output-equal, but not the mitigation asked for)
-    ck = (
-        None
-        if cache_key is None
-        else (cache_key, on, hot_threshold, sample_fraction)
-    )
-    hot = _HOT_KEYS_CACHE.get(ck) if ck is not None else None
-    if hot is None:
+    def profile() -> list:
         cut = max(1, int(hot_threshold * sample_fraction / 2))
-        hot = [
+        return [
             r[0]
             for r in large.sample(fraction=sample_fraction, seed=42)
             .groupBy(on)
@@ -554,8 +542,17 @@ def adaptive_salted_join(
             .select(on)
             .collect()
         ]
-        if ck is not None:
-            _HOT_KEYS_CACHE[ck] = hot
+
+    # hot-key lists are dataset properties of a table, memoized like the
+    # signatures / corpus_shingles, so repeat builds skip the sample job.
+    # sample_fraction is part of the key (ADVICE r8 low: omitting it let a
+    # later call with a different detection sensitivity silently reuse the
+    # stale hot-key list — output-equal, but not the mitigation asked for)
+    hot = memo(
+        large.sparkSession,
+        (cache_key, "hot_keys", on, hot_threshold, sample_fraction),
+        profile,
+    )
     if not hot:
         return large.join(small, on)
     is_hot = F.col(on).isin(hot)
@@ -748,16 +745,12 @@ def key_span_fraction(path: str, key: str) -> float | None:
     return sum((b - a) / (gmax - gmin) * r for a, b, r in spans) / n
 
 
-# advisor verdicts are dataset properties of an immutable table (the same
-# memo contract as _HOT_KEYS_CACHE / dedup._SIG_CACHE): keyed on the
-# caller-supplied cache_key + decision inputs, so the query builders that
-# route through the advisor (skew_salted_join, revenue_by_nation,
-# layout_advised_scan) pay its count/ndv/sample jobs once per session, not
-# per build — required for the r14 integration to leave steady-state bench
-# times unchanged
-_ADVICE_CACHE: dict = {}
-
-
+# advisor verdicts are dataset properties of a table (memoized like the
+# hot-key lists): keyed on the caller-supplied cache_key + decision inputs,
+# so the query builders that route through the advisor (skew_salted_join,
+# revenue_by_nation, layout_advised_scan) pay its count/ndv/sample jobs once
+# per session, not per build — required for the r14 integration to leave
+# steady-state bench times unchanged
 def layout_advise(
     df: DataFrame,
     key: str,
@@ -767,26 +760,17 @@ def layout_advise(
     table_bytes: int | None = None,
     cache_key=None,
 ) -> dict:
-    if cache_key is not None:
-        # the gate constants join the memo key: they are module globals the
-        # tests monkeypatch to force regimes, and a verdict cached under one
-        # gate set must never answer for another
-        akey = (
-            cache_key, key, workload, second_key, table_path, table_bytes,
-            _BUCKET_LAYOUT_GATE_BYTES, HOT_KEY_ROWS, PARTITION_NDV_MAX,
-            PARTITION_MIN_ROWS_PER_VALUE, BLOOM_SPAN_BOUNDARY,
-        )
-        hit = _ADVICE_CACHE.get(akey)
-        if hit is None:
-            hit = _layout_advise_impl(
-                df, key, workload, second_key, table_path, table_bytes,
-                cache_key,
-            )
-            _ADVICE_CACHE[akey] = hit
-        return hit
-    return _layout_advise_impl(
-        df, key, workload, second_key, table_path, table_bytes, cache_key
+    # the gate constants join the memo key: they are module globals the
+    # tests monkeypatch to force regimes, and a verdict cached under one
+    # gate set must never answer for another
+    akey = (
+        cache_key, "advice", key, workload, second_key, table_path, table_bytes,
+        _BUCKET_LAYOUT_GATE_BYTES, HOT_KEY_ROWS, PARTITION_NDV_MAX,
+        PARTITION_MIN_ROWS_PER_VALUE, BLOOM_SPAN_BOUNDARY,
     )
+    return memo(df.sparkSession, akey, lambda: _layout_advise_impl(
+        df, key, workload, second_key, table_path, table_bytes, cache_key,
+    ))
 
 
 layout_advise.__doc__ = """Memoizing wrapper over _layout_advise_impl — see

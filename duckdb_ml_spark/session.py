@@ -207,21 +207,3 @@ def ensure_shipped(spark: SparkSession) -> None:
                     zf.write(full, os.path.relpath(full, repo))
     sc.addPyFile(zip_path)
     _SHIPPED_CONTEXTS.add(key)
-
-
-def apply_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-created session.
-
-    The driver harness constructs its own SparkSession; only conf keys that are
-    runtime-mutable are set here (timezone matters for timestamp queries vs the
-    naive-UTC DuckDB oracle). Static confs such as the codegen cache size
-    (CODEGEN_CACHE_ENTRIES) are fixed when the JVM's first session starts and
-    cannot be applied here; such a session keeps Spark's 100-class cache.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass  # static conf on some builds; harmless
-    return spark

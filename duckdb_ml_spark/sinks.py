@@ -232,14 +232,19 @@ def compact_small_files(
     cost, tiny row groups, and task-scheduling overhead at read time; after
     compaction each scan task gets a full-size file. The rewrite is one read
     + one coalesce write (no shuffle: coalesce only merges partitions).
-    Returns the output file count."""
+    Rows are sorted within each output file on every column. With one
+    output file (input under `target_bytes`) the bytes written are then a
+    function of the rows, not of the order the shards were listed and read
+    in; with several, which shards go into which file still follows the
+    read order. Returns the output file count."""
     total = 0
     for root, _dirs, files in os.walk(in_dir):
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     n_out = max(1, -(-total // target_bytes))
-    spark.read.parquet(in_dir).coalesce(n_out).write.mode("overwrite").parquet(out_dir)
+    df = spark.read.parquet(in_dir)
+    df.coalesce(n_out).sortWithinPartitions(*df.columns).write.mode("overwrite").parquet(out_dir)
     return sum(1 for f in os.listdir(out_dir) if f.endswith(".parquet"))
 
 

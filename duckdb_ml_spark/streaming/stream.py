@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_ml_spark.memo import memo
+
 EVENTS_SCHEMA_NS = "event_id bigint, ts bigint, user_id bigint, event_type string, value double, props string"
 EVENTS_SCHEMA_US = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-
-
-_TS_IS_NS: dict[str, bool] = {}  # memoized footer peek per sf_dir (immutable testdata)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,11 +41,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_ml_spark.tables import _prepare
 
     _prepare(spark)
-    is_ns = _TS_IS_NS.get(sf_dir)
-    if is_ns is None:
-        on_disk = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
-        is_ns = isinstance(on_disk, LongType)
-        _TS_IS_NS[sf_dir] = is_ns
+    is_ns = memo(spark, (sf_dir, "events_ts_is_ns"), lambda: isinstance(
+        spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType, LongType))
     # file stream source requires a directory; glob-filter to the events file
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA_NS if is_ns else EVENTS_SCHEMA_US)

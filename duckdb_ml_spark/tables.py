@@ -8,6 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_ml_spark.memo import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -22,18 +24,8 @@ TABLE_NAMES = (
 )
 
 
-# Session-prep runs ONCE per SparkSession and loaded tables are memoized per
-# (session, sf_dir, name): a parquet `read` costs driver RPCs + a footer/schema
-# read every call, and the suite calls load() ~60 times over 10 immutable
-# tables. The cached object is the lazy DataFrame (the analyzed plan), NOT
-# materialized data — every query still scans parquet on the executors, with
-# full pushdown/pruning, exactly as an uncached read would.
-_PREPARED: dict[int, SparkSession] = {}  # strong refs pin id() uniqueness
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def _prepare(spark: SparkSession) -> None:
-    """Once-per-session engine conf, safe under the driver's own session.
+    """Session conf every table read needs, safe on a session the engine did not create.
 
     - UTC session timezone: window/date_trunc/session_window semantics must
       match the naive-UTC testdata and the DuckDB oracle.
@@ -41,55 +33,54 @@ def _prepare(spark: SparkSession) -> None:
       otherwise rejects.
     - ensure_shipped: package importable on executor workers whatever the cwd.
     """
-    key = id(spark)
-    if key in _PREPARED:
-        return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     from duckdb_ml_spark.session import ensure_shipped
 
     ensure_shipped(spark)
-    _PREPARED[key] = spark
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table. Plain parquet scan → Catalyst gets full pushdown/pruning.
 
+    Memoized per (session, sf_dir, name): a parquet `read` costs driver RPCs
+    + a footer/schema read every call, and the suite calls load() ~60 times
+    over 10 tables. The memo holds the lazy DataFrame (the analyzed plan),
+    NOT materialized data — every query still scans parquet on the
+    executors, with full pushdown/pruning, exactly as an uncached read would.
+
     The events table's TIMESTAMP(NANOS) is read as long and converted to a
     microsecond timestamp with integer division (matches DuckDB's ns→µs
     truncation; a double-typed division would lose precision above 2^53 ns).
     """
+    return memo(spark, (sf_dir, "table", name), lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _prepare(spark)
-    key = (id(spark), sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        if name == "events":
-            from pyspark.sql import functions as F
-            from pyspark.sql.types import LongType
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name != "events":
+        return df
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
 
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            # The driver's testdata has stored ts as TIMESTAMP(NANOS) (read as
-            # long via nanosAsLong) in some rounds and TIMESTAMP(MICROS) in
-            # others; normalize either encoding to a µs TimestampType column.
-            if isinstance(df.schema["ts"].dataType, LongType):
-                # Guard the ns→µs div-1000: a LongType ts must actually be
-                # TIMESTAMP(NANOS) read via nanosAsLong. If a future round ships
-                # ts as plain INT64 µs, dividing would silently misscale 1000×.
-                import pyarrow.parquet as pq
+    # The test data has stored ts as TIMESTAMP(NANOS) (read as long via
+    # nanosAsLong) in some versions and TIMESTAMP(MICROS) in others;
+    # normalize either encoding to a µs TimestampType column.
+    if not isinstance(df.schema["ts"].dataType, LongType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    # Guard the ns→µs div-1000: a LongType ts must actually be
+    # TIMESTAMP(NANOS) read via nanosAsLong. If a future round ships
+    # ts as plain INT64 µs, dividing would silently misscale 1000×.
+    import pyarrow.parquet as pq
 
-                field = pq.read_schema(f"{sf_dir}/{name}.parquet").field("ts")
-                if not (str(field.type).startswith("timestamp[ns")):
-                    raise ValueError(
-                        f"events.ts read as int64 but parquet logical type is "
-                        f"{field.type}, not TIMESTAMP(NANOS) — refusing ns→µs conversion"
-                    )
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _CACHE[key] = df
-    return df
+    field = pq.read_schema(f"{sf_dir}/{name}.parquet").field("ts")
+    if not (str(field.type).startswith("timestamp[ns")):
+        raise ValueError(
+            f"events.ts read as int64 but parquet logical type is "
+            f"{field.type}, not TIMESTAMP(NANOS) — refusing ns→µs conversion"
+        )
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> None:

@@ -36,28 +36,26 @@ def test_retired_canaries_not_registered():
     assert "canary_null_bool" not in names
 
 
-def test_plan_cache_resets_on_session_change(spark):
-    """VERDICT r13 nit: the queries() plan cache keyed on id(spark) must not
-    accumulate entries for dead sessions — a new session id resets it."""
+def test_plan_cache_resets_on_session_change(spark, sf_dir):
+    """VERDICT r13 nit: the queries() plan memo must not accumulate entries
+    for dead sessions — a new session's first call resets it, and the two
+    sessions never share a built plan."""
     import __spark_entry__ as entrymod
+    from duckdb_ml_spark import memo
 
-    entrymod._PLAN_CACHE.clear()
-    entrymod._PLAN_CACHE_SESSION[0] = None
+    sf = sf_dir
+    memo.reset()
     qs = entrymod.queries()
-    qs["range_ids"](spark, "/root/testdata/sf0.001")
-    n1 = len(entrymod._PLAN_CACHE)
-    assert n1 >= 1 and entrymod._PLAN_CACHE_SESSION[0] == id(spark)
-
-    class _Fake:  # a different session identity; builder never executes it
-        pass
-
-    fake = _Fake()
+    df1 = qs["range_ids"](spark, sf)
+    assert qs["range_ids"](spark, sf) is df1  # memoized within the session
+    n1 = memo.stats()["entries"]
+    assert n1 >= 1
+    other = spark.newSession()
     try:
-        qs["range_ids"](fake, "/root/testdata/sf0.001")
-    except Exception:
-        pass  # the builder will choke on the fake session — irrelevant here
-    assert entrymod._PLAN_CACHE_SESSION[0] == id(fake)
-    # the real-session entries are GONE (no cross-session growth)
-    assert all(k[0] == id(fake) for k in entrymod._PLAN_CACHE)
-    entrymod._PLAN_CACHE.clear()
-    entrymod._PLAN_CACHE_SESSION[0] = None
+        df2 = qs["range_ids"](other, sf)
+        assert df2 is not df1
+        # the first session's entries are GONE (no cross-session growth)
+        assert memo.stats()["entries"] == n1
+        assert qs["range_ids"](other, sf) is df2
+    finally:
+        memo.reset()

@@ -1964,6 +1964,15 @@ def test_per_source_k_null_group_key(spark):
     assert sorted(by_g[None]) == [1, 2, 3, 4, 5]
 
 
+def _memo_held(key):
+    """The value the memo holds for `key`, or None. Reads the held entries
+    directly, so a peek registers no directory and counts no miss."""
+    from duckdb_ml_spark import memo
+
+    d = memo._dir_of(key)
+    return memo._DIRS[d][1].get(key) if d in memo._DIRS else None
+
+
 def test_per_source_k_stale_size_cache_detected(spark, monkeypatch):
     """ADVICE r13 (medium): a dataset reusing a cache_key that gains a NEW
     group must NOT silently drop that group — the threshold branch's map
@@ -1971,21 +1980,20 @@ def test_per_source_k_stale_size_cache_detected(spark, monkeypatch):
     map. The coalesce keep-all arm surfaces the group in the survivors and
     the function recomputes, so the output covers every group in the data."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark.memo import drop
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)  # force threshold path
     key = ("test-stale-psk",)
-    _PSK_SIZES_CACHE.pop((key, "source", "psk_sizes"), None)
+    skey = (key, "psk_sizes", "source")
+    drop(skey)
     df1 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(200)],
         "doc_id bigint, source string",
     )
     out1 = per_source_uniform_k(df1, k=3, cache_key=key).collect()
     assert {r.source for r in out1} == {"a", "b"}
-    assert (key, "source", "psk_sizes") in _PSK_SIZES_CACHE
+    assert _memo_held(skey) is not None
     # same cache_key, new group "c" (and more rows in a/b): the stale map
     # has no threshold for "c"
     df2 = spark.createDataFrame(
@@ -2000,9 +2008,9 @@ def test_per_source_k_stale_size_cache_detected(spark, monkeypatch):
     for g in ("a", "b", "c"):
         assert sorted(by_g[g]) == [1, 2, 3]
     # the cache entry was refreshed to the new data's sizes
-    refreshed = _PSK_SIZES_CACHE[(key, "source", "psk_sizes")]
+    refreshed = _memo_held(skey)
     assert set(refreshed) == {"a", "b", "c"}
-    _PSK_SIZES_CACHE.pop((key, "source", "psk_sizes"), None)
+    drop(skey)
 
 
 def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
@@ -2012,14 +2020,12 @@ def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
     than reality is impossible — instead sizes match but we shrink k's
     threshold by inflating cached n), then require the exact bottom-k."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark.memo import drop, memo
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)
     key = ("test-escalate-psk",)
-    skey = (key, "source", "psk_sizes")
+    skey = (key, "psk_sizes", "source")
     df = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(400)],
         "doc_id bigint, source string",
@@ -2032,10 +2038,11 @@ def test_per_source_k_margin_escalation_distributed(spark, monkeypatch):
     # threshold becomes ~16·k/200000 — too tight, escalates to 4096, which
     # at 4096·4/200000 of 2^60 still keeps enough with high probability;
     # if not, the final window fallback still returns the exact answer
-    _PSK_SIZES_CACHE[skey] = {"a": 200_000, "b": 200_000}
+    drop(skey)
+    memo(spark, skey, lambda: {"a": 200_000, "b": 200_000})
     got = sorted(map(tuple, per_source_uniform_k(df, k=4, cache_key=key).collect()))
     assert got == want
-    _PSK_SIZES_CACHE.pop(skey, None)
+    drop(skey)
 
 
 def test_per_source_k_grown_group_stale_cache_detected(spark, monkeypatch):
@@ -2044,22 +2051,20 @@ def test_per_source_k_grown_group_stale_cache_detected(spark, monkeypatch):
     The survivor-overflow detector (survivors > cached group size, which is
     impossible under a fresh map) marks the cache stale and recomputes."""
     import duckdb_ml_spark.plans.orderstats as orderstats
-    from duckdb_ml_spark.operators.sampling import (
-        _PSK_SIZES_CACHE,
-        per_source_uniform_k,
-    )
+    from duckdb_ml_spark.memo import drop
+    from duckdb_ml_spark.operators.sampling import per_source_uniform_k
 
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 1)  # force threshold path
     key = ("test-grown-psk",)
-    skey = (key, "source", "psk_sizes")
-    _PSK_SIZES_CACHE.pop(skey, None)
+    skey = (key, "psk_sizes", "source")
+    drop(skey)
     df1 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(40)],
         "doc_id bigint, source string",
     )
     out1 = per_source_uniform_k(df1, k=3, cache_key=key).collect()
     assert {r.source for r in out1} == {"a", "b"}
-    assert _PSK_SIZES_CACHE[skey] == {"a": 20, "b": 20}
+    assert _memo_held(skey) == {"a": 20, "b": 20}
     # same cache_key, SAME groups, 10x the rows: cached sizes now lie small
     df2 = spark.createDataFrame(
         [(i, "a" if i % 2 else "b") for i in range(400)],
@@ -2067,30 +2072,33 @@ def test_per_source_k_grown_group_stale_cache_detected(spark, monkeypatch):
     )
     got = sorted(map(tuple, per_source_uniform_k(df2, k=3, cache_key=key).collect()))
     monkeypatch.setattr(orderstats, "RANK_WINDOW_GATE", 10**9)
-    _PSK_SIZES_CACHE.pop(skey, None)
     want = sorted(map(tuple, per_source_uniform_k(df2, k=3).collect()))
     assert got == want
     # and the cache entry was refreshed to the grown sizes
-    assert _PSK_SIZES_CACHE.get(skey, {}).get("a") in (None, 200)
-    _PSK_SIZES_CACHE.pop(skey, None)
+    assert (_memo_held(skey) or {}).get("a") in (None, 200)
+    drop(skey)
 
 
 def test_dedup_session_caches_reset_on_new_session(spark, sf_dir):
-    """ADVICE r14 (low): the id(spark)-keyed dedup caches (_SIG_CACHE,
-    _EDITDIST_PFX_CACHE) must reset when a NEW session id appears — the
-    same single-session pattern as __spark_entry__._PLAN_CACHE — so a dead
-    session's localCheckpointed prefix DataFrame can never be resurrected
-    by CPython id() reuse."""
+    """ADVICE r14 (low): the dedup artifacts (minhash signatures, the
+    localCheckpointed editdist prefix table) belong to one session — a
+    NEW session must never see them, so a dead session's checkpointed
+    prefix DataFrame can never be resurrected for another session."""
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.operators import dedup
 
-    dedup._reset_session_caches(spark)
-    dedup._collect_signatures(spark, sf_dir)
-    assert any(k[0] == id(spark) for k in dedup._SIG_CACHE)
-    dedup._EDITDIST_PFX_CACHE[(id(spark), sf_dir, 32)] = object()
-
-    class _Fake:  # a different "session" object → different id
-        pass
-
-    dedup._reset_session_caches(_Fake())
-    assert dedup._SIG_CACHE == {} and dedup._EDITDIST_PFX_CACHE == {}
-    dedup._reset_session_caches(spark)  # restore for later tests
+    sigs = dedup._collect_signatures(spark, sf_dir)
+    assert dedup._collect_signatures(spark, sf_dir) is sigs  # memoized
+    pkey = (sf_dir, "editdist_pfx", 32)
+    stale = object()
+    memo.memo(spark, pkey, lambda: stale)
+    other = spark.newSession()
+    try:
+        # the new session's first lookup builds its own entry ...
+        fresh = object()
+        assert memo.memo(other, pkey, lambda: fresh) is fresh
+        # ... and the first session's entries are gone with it
+        assert _memo_held((sf_dir, "minhash_sigs")) is None
+        assert _memo_held(pkey) is fresh
+    finally:
+        memo.reset()  # later tests rebuild under the fixture's session

@@ -81,6 +81,24 @@ def test_pack_stats_fill_bounded(spark, sf_dir):
         assert r.n_packs >= 1
 
 
+def test_pack_stats_fill_ratio_exact_tie(spark):
+    """1282 tokens over 5 packs of 256 is 1.0015625, an exact tie at 6
+    decimals: rounding the double quotient gave 1.001563 in Spark and
+    1.001562 in DuckDB. Both engines now round the exact ratio half-up."""
+    import duckdb
+
+    from duckdb_ml_spark.operators.pipeline import fill_ratio_sql, pack_stats
+
+    packed = spark.createDataFrame(
+        [(i, "s", t, i) for i, t in enumerate((257, 256, 256, 256, 257))],
+        "doc_id bigint, source string, n_tokens bigint, pack_id bigint",
+    )
+    (r,) = pack_stats(packed, capacity=256).collect()
+    assert (r.n_packs, r.n_tokens) == (5, 1282)
+    duck = duckdb.sql(f"SELECT {fill_ratio_sql('1282', '5', '//', 256)}").fetchone()[0]
+    assert r.fill_ratio == duck == 1.001563
+
+
 def test_pack_manifest_conservation(spark, sf_dir):
     """Every doc's tokens_in_pack rows must sum to its n_tokens, and each
     pack's take from a doc is within (0, capacity]."""

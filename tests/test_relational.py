@@ -165,6 +165,39 @@ def test_compaction_collapses_files_preserving_rows(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
+def test_compaction_bytes_do_not_depend_on_shard_order(spark, sf_dir, tmp_path):
+    """Same rows in, same bytes out: the compacted file of a shard set is
+    byte-identical whether the shards are listed in another order (renamed)
+    or hold the rows in another arrangement."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from duckdb_ml_spark.sinks import compact_small_files
+    from duckdb_ml_spark.tables import load
+
+    docs = load(spark, sf_dir, "documents")
+    a, b, c = (str(tmp_path / n) for n in ("a", "b", "c"))
+    docs.repartition(16).write.parquet(a)
+    os.makedirs(b)
+    parts = sorted(f for f in os.listdir(a) if f.endswith(".parquet"))
+    for i, f in enumerate(reversed(parts)):  # reversed listing order
+        shutil.copyfile(os.path.join(a, f), os.path.join(b, f"part-{i:05d}.parquet"))
+    docs.orderBy(F.desc("doc_id")).coalesce(5).write.parquet(c)
+
+    def compacted(src: str) -> bytes:
+        out = src + "_out"
+        assert compact_small_files(spark, src, out) == 1
+        (f,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        with open(os.path.join(out, f), "rb") as fh:
+            return fh.read()
+
+    want = compacted(a)
+    assert compacted(b) == want
+    assert compacted(c) == want
+
+
 def test_two_pass_rank_equals_single_window(spark, sf_dir):
     """The r5 two-pass range-bucket rank (orderstats.keyed_global_rank) must
     produce row-for-row the same distribution values as the reference
@@ -706,16 +739,20 @@ def test_cached_count_null_discriminator(spark):
     NULL-FILTERED relation, keyed_global_rank/quantiles_wide the unfiltered
     one — the shared cache_key slot let the first caller seed the other's
     gate decision. Each must see its own count."""
-    from duckdb_ml_spark.operators.dedup import _COUNT_CACHE
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.plans.orderstats import quantiles_wide, winsorized_stats
+
+    def cached_count(key):  # the count the memo holds, read without a lookup
+        held = memo._DIRS.get(memo._dir_of(key))
+        return held[1].get((key, "count")) if held else None
 
     rows = [("a", float(i)) for i in range(50)] + [("a", None)] * 10
     df = spark.createDataFrame(rows, "k string, v double")
     ck = ("test_cc_discriminator", "v")
     winsorized_stats(df, "k", "v", 0.05, 0.95, cache_key=ck, mode="auto").collect()
-    assert _COUNT_CACHE[(ck, "notnull", "v")] == 50
+    assert cached_count((ck, "notnull", "v")) == 50
     quantiles_wide(df, "k", "v", [0.5], ["p50"], cache_key=ck, mode="auto").collect()
-    assert _COUNT_CACHE[ck] == 60  # unfiltered callers still see all rows
+    assert cached_count(ck) == 60  # unfiltered callers still see all rows
 
 
 def test_mismatch_forensics_dump(spark, tmp_path):

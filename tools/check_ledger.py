@@ -293,7 +293,14 @@ if __name__ == "__main__":
     with open(REPO / ".tmp" / "checkledger.json", "w") as f:
         json.dump(ledger, f, indent=1)
     stale = [r for r in ledger["rows"] if r["stale"]]
-    print(json.dumps({"total": len(ledger["rows"]), "stale": len(stale)}))
-    for r in stale:
-        print(f"  STALE {r['query']} (r{r['last_green_round']}, {r['module']})"
-              f"{' [window]' if r['in_window'] else ''}")
+    try:
+        print(json.dumps({"total": len(ledger["rows"]), "stale": len(stale)}))
+        for r in stale:
+            print(f"  STALE {r['query']} (r{r['last_green_round']}, {r['module']})"
+                  f"{' [window]' if r['in_window'] else ''}")
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader closed the pipe early (`| head`); the ledger files are
+        # already written, so that is not a failure. Point stdout at devnull
+        # so the interpreter's exit flush does not raise again.
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())

@@ -65,6 +65,7 @@ def main() -> int:
         return 1
 
     import __spark_entry__ as entrymod
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.session import get_spark
     from duckdb_ml_spark.tables import load
 
@@ -87,7 +88,7 @@ def main() -> int:
         print(f"spark {name}: {s_times[name]}", file=sys.stderr)
     runs = []
     for _ in range(args.runs):
-        entrymod._PLAN_CACHE.clear()
+        memo.drop((str(SF), "plan", "pricing_summary"))
         runs.append(t_spark(lambda: qs["pricing_summary"](spark, str(SF)).collect()))
     s_times["full"] = round(min(runs), 2)
     print(f"spark full: {s_times['full']}", file=sys.stderr)

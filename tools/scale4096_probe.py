@@ -68,6 +68,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from duckdb_ml_spark import memo
     from duckdb_ml_spark.session import get_spark
 
     spark = get_spark("scale4096", sf_dir=str(sf_dir))
@@ -92,7 +93,7 @@ def main() -> int:
         sruns = []
         srows = None
         for _ in range(args.runs):
-            entrymod._PLAN_CACHE.clear()
+            memo.drop((str(sf_dir), "plan", qname))
             t0 = time.time()
             srows = [tuple(r) for r in qs[qname](spark, str(sf_dir)).collect()]
             sruns.append(round(time.time() - t0, 2))
