@@ -1,9 +1,10 @@
-"""The engine's one memo for dataset artifacts.
+"""The engine's one rule for artifacts derived from an input directory:
+an artifact is reused while the input it derives from is unchanged, and
+rebuilt when that input moves. Two stores follow it.
 
-Table reads, built query plans, row counts, collected matrices, signatures,
-codebooks, merge tables, range bounds and materialized relations are all
-pure functions of an input directory, and a session reuses them across its
-queries. Every such artifact goes through `memo(spark, key, build)`:
+In memory, `memo(spark, key, build)` holds table reads, built query plans,
+row counts, collected matrices, signatures, codebooks, merge tables, range
+bounds and materialized relations:
 
 - Entries belong to the live Spark session, named by the JVM session's
   `sessionUUID()`. The engine runs one session at a time, so a call from
@@ -13,18 +14,33 @@ queries. Every such artifact goes through `memo(spark, key, build)`:
   (name, size, mtime_ns) per entry; when a table is rewritten in place the
   fingerprint moves and the directory's entries are rebuilt. A key whose
   root is not a directory fingerprints as `None` (never stale).
-  Engine exports go to `.tmp/<basename>`, never into the input directory,
-  so a warm directory's fingerprint is stable.
 - At most `MAX_DIRS` directories are held; the least recently used one is
   evicted whole. Evicted entries are released: a localCheckpointed frame is
   unpersisted, so a frame the memo built must not be run after its
   directory has been evicted or rewritten.
+
+On disk, `derived_dir(sf_dir, sources, name, write)` holds exports, layouts
+and indexes under `.tmp/<basename(sf_dir)>/<name>-<fp>`, never inside the
+input directory (so a warm input's fingerprint is stable):
+
+- `fp` hashes (path, size, mtime_ns) of every file of the source tables the
+  artifact reads, plus the derivation's parameters: rewriting a source in
+  place names a new directory.
+- A directory is complete if and only if it exists under its final name.
+  It is written into a sibling staging directory and renamed into place;
+  a writer that loses the rename to a concurrent one discards its own copy.
+- Siblings of the same name (superseded fingerprints, abandoned staging
+  directories) are removed once untouched for `_COLD_S` seconds, so a
+  concurrent session still reading an older one keeps it meanwhile.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import time
+import uuid
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -39,6 +55,10 @@ MAX_DIRS = 1
 _SESSION: list = [None]
 _DIRS: OrderedDict = OrderedDict()
 _STATS = {"hits": 0, "misses": 0, "build_s": 0.0}
+
+# every derived directory lives under <repo>/.tmp/<basename(sf_dir)>
+_TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+_COLD_S = 6 * 3600
 
 
 def _dir_of(key):
@@ -128,3 +148,56 @@ def stats() -> dict:
     """Counters since process start (hits, misses, build seconds) plus the
     directories and entries held now."""
     return {**_STATS, "dirs": len(_DIRS), "entries": sum(len(e) for _, e in _DIRS.values())}
+
+
+def work_dir(sf_dir: str) -> str:
+    """`.tmp/<basename(sf_dir)>`: the one place the engine writes for an
+    input (derived directories, plus per-call outputs such as shards)."""
+    return os.path.join(_TMP, os.path.basename(sf_dir))
+
+
+def _source_fingerprint(sf_dir: str, sources, params: str) -> str:
+    paths = []
+    for s in sources:
+        src = os.path.join(sf_dir, f"{s}.parquet")
+        if os.path.isdir(src):
+            paths += [os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs]
+        elif os.path.exists(src):
+            paths.append(src)
+    h = hashlib.sha1()
+    for p in sorted(paths):
+        st = os.stat(p)
+        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
+    h.update(params.encode())
+    return h.hexdigest()[:10]
+
+
+def derived_dir(sf_dir: str, sources, name: str, write, params: str = "") -> str:
+    """The directory holding artifact `name` of the tables `sources` (names
+    without `.parquet`) of `sf_dir`, derived with `params`; `write(path)`
+    creates and fills `path` when no complete copy exists."""
+    parent = work_dir(sf_dir)
+    target = os.path.join(parent, f"{name}-{_source_fingerprint(sf_dir, sources, params)}")
+    if not os.path.isdir(target):
+        os.makedirs(parent, exist_ok=True)
+        staging = f"{target}.staging-{uuid.uuid4().hex}"
+        try:
+            write(staging)
+            try:
+                os.rename(staging, target)
+            except OSError:
+                if not os.path.isdir(target):  # not a lost race
+                    raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+    now = time.time()
+    with os.scandir(parent) as it:
+        for e in it:
+            if e.name.startswith(f"{name}-") and e.path != target:
+                try:
+                    cold = now - e.stat().st_mtime > _COLD_S
+                except OSError:
+                    continue
+                if cold:
+                    shutil.rmtree(e.path, ignore_errors=True)
+    return target

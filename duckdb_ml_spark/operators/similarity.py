@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from duckdb_ml_spark.memo import memo
+from duckdb_ml_spark.memo import derived_dir, memo
 from duckdb_ml_spark.plans.relational import QuerySpec
 from duckdb_ml_spark.tables import load
 
@@ -730,40 +730,36 @@ LIMIT {RRF_OUT}
 # --- persistent IVF index (build once, query many) ---------------------------
 
 
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, path: str, stride: int = CENTROID_STRIDE
-) -> None:
-    """Persist the IVF index as tables: `centroids` parquet (c_id, embedding)
-    + `assign` parquet PARTITIONED BY bucket. This is the serving shape every
-    ANN system uses — the corpus-scale assignment pass runs ONCE at build;
-    a query then touches only its probed buckets' partitions (directory
-    pruning, asserted in tests). Idempotent per path (marker file)."""
+def build_ivf_index(spark: SparkSession, sf_dir: str, stride: int = CENTROID_STRIDE) -> str:
+    """Persist the IVF index as tables and return its directory: `centroids`
+    parquet (c_id, embedding) + `assign` parquet PARTITIONED BY bucket. This
+    is the serving shape every ANN system uses — the corpus-scale assignment
+    pass runs ONCE per embeddings content (a `derived_dir`); a query then
+    touches only its probed buckets' partitions (directory pruning, asserted
+    in tests)."""
     import os
+
+    import numpy as np
 
     from duckdb_ml_spark.operators.vec import assign_nearest_vs_broadcast, collect_matrix
 
-    marker = os.path.join(path, "_INDEX_READY")
-    if os.path.exists(marker):
-        return
-    emb = load(spark, sf_dir, "embeddings")
-    cent_ids, CM = collect_matrix(
-        emb.where(F.col("vec_id") % stride == 0), "vec_id",
-        cache_key=(sf_dir, "ivf_cent", stride),
-    )
-    import numpy as np
+    def write(path):
+        emb = load(spark, sf_dir, "embeddings")
+        cent_ids, CM = collect_matrix(
+            emb.where(F.col("vec_id") % stride == 0), "vec_id",
+            cache_key=(sf_dir, "ivf_cent", stride),
+        )
+        order = np.argsort(cent_ids)
+        cent_ids, CM = cent_ids[order], CM[order]
+        assigned = assign_nearest_vs_broadcast(emb, cent_ids, CM, "vec_id")
+        assigned.write.partitionBy("bucket").parquet(os.path.join(path, "assign"))
+        cdf = spark.createDataFrame(
+            [(int(c), [float(x) for x in CM[i]]) for i, c in enumerate(cent_ids)],
+            "c_id bigint, embedding array<double>",
+        )
+        cdf.write.parquet(os.path.join(path, "centroids"))
 
-    order = np.argsort(cent_ids)
-    cent_ids, CM = cent_ids[order], CM[order]
-    assigned = assign_nearest_vs_broadcast(emb, cent_ids, CM, "vec_id")
-    assigned.write.partitionBy("bucket").mode("overwrite").parquet(
-        os.path.join(path, "assign")
-    )
-    cdf = spark.createDataFrame(
-        [(int(c), [float(x) for x in CM[i]]) for i, c in enumerate(cent_ids)],
-        "c_id bigint, embedding array<double>",
-    )
-    cdf.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    open(marker, "w").close()
+    return derived_dir(sf_dir, ["embeddings"], "ivf_index", write, params=f"stride{stride}")
 
 
 def ivf_topk_from_index(
@@ -830,11 +826,7 @@ def ivf_topk_from_index(
 
 
 def _ivf_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(repo, ".tmp", os.path.basename(sf_dir), "ivf_index")
-    build_ivf_index(spark, sf_dir, path)
+    path = build_ivf_index(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk_from_index(
         spark, sf_dir, path, emb.where(F.col("vec_id") < N_QUERIES)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from duckdb_ml_spark.memo import memo
+from duckdb_ml_spark.memo import derived_dir, memo
 
 
 def salted_agg(
@@ -187,71 +187,6 @@ def rowgroup_overlap_fraction(path: str, col_a: str, box_a: tuple,
 _Z_FRAC = (0.45, 0.55)
 
 
-def layout_cache_dir(sf_dir: str, table_file, name: str, params: str = "") -> str:
-    """Content-fingerprinted cache dir for derived parquet LAYOUTS (z-order,
-    bloom) — ADVICE r11: the previous `.tmp/<basename(sf_dir)>/<name>` key
-    guarded only by _SUCCESS meant a regenerated sf_dir with the same
-    basename (the driver rewrites testdata between rounds) or a concurrent
-    half-written layout could be probed silently. The fingerprint of the
-    SOURCE table (every file's path, size, mtime_ns) is part of the dir name,
-    so changed source content gets a fresh dir automatically and a stale
-    layout can never satisfy the marker check; abandoned half-writes land in
-    a dir whose _SUCCESS never appears and are rewritten on next use."""
-    import glob as _glob
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-
-    # one layout may derive from SEVERAL source tables (e.g. revenue's
-    # li_asia reads lineitem AND supplier/nation/region): every input
-    # fingerprints the cache, else a regenerated dimension silently
-    # re-registers a stale pre-filtered layout (r12 review finding)
-    files = [table_file] if isinstance(table_file, str) else list(table_file)
-    h = hashlib.sha1()
-    paths = []
-    for tf in files:
-        src = _os.path.join(sf_dir, tf)
-        if _os.path.isdir(src):
-            for root, _, fs in _os.walk(src):
-                paths += [_os.path.join(root, f) for f in fs]
-        elif _os.path.exists(src):
-            paths.append(src)
-    for p in sorted(paths):
-        st = _os.stat(p)
-        h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
-    h.update(params.encode())  # layout parameters invalidate the cache too
-    fp = h.hexdigest()[:10]
-    parent = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__))),
-        ".tmp", _os.path.basename(sf_dir),
-    )
-    target = _os.path.join(parent, f"{name}-{fp}")
-    # evict superseded fingerprints of the SAME layout: each source
-    # regeneration would otherwise orphan a multi-GB dir forever (this host
-    # already juggles disk for the 2048× caches). Two guards (ADVICE r12 —
-    # "single-host" is really "single-process" without them):
-    #   1. only evict AFTER the new dir is complete (_SUCCESS): a failed
-    #      write after an eager eviction would leave NO usable layout;
-    #   2. skip siblings modified within the last 6h: a concurrent session
-    #      (bench run + gate replica on the same host are both supported)
-    #      may hold a live registered table over a different fingerprint —
-    #      a dead generation's dir goes cold and is reaped on a later call.
-    if _os.path.exists(_os.path.join(target, "_SUCCESS")):
-        import time as _time
-
-        now = _time.time()
-        for sib in _glob.glob(_os.path.join(parent, f"{name}-*")):
-            if sib == target:
-                continue
-            try:
-                age = now - _os.stat(sib).st_mtime
-            except OSError:
-                continue
-            if age > 6 * 3600:
-                _shutil.rmtree(sib, ignore_errors=True)
-    return target
-
-
 def _zorder_box(spark, sf_dir: str):
     from duckdb_ml_spark.tables import load
 
@@ -282,12 +217,11 @@ def _zorder_q(spark, sf_dir: str):
     curve buys robustness across query shapes, not dominance on one box.
     The oracle runs the identical predicate on the ORIGINAL table — layout
     must never change results."""
-    import os as _os
-
     li, (a_lo, a_hi), (b_lo, b_hi) = _zorder_box(spark, sf_dir)
-    out = layout_cache_dir(sf_dir, "lineitem.parquet", "lineitem_zorder")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        zorder_write(li, "l_orderkey", "l_partkey", out)
+    out = derived_dir(
+        sf_dir, ["lineitem"], "lineitem_zorder",
+        lambda d: zorder_write(li, "l_orderkey", "l_partkey", d),
+    )
     back = spark.read.parquet(out)
     sel = back.where(
         F.col("l_orderkey").between(a_lo, a_hi)
@@ -419,20 +353,21 @@ def _bloom_q(spark, sf_dir: str):
     orders, keys = _bloom_keys(spark, sf_dir)
     # Size the blooms to the per-file key count (expected.ndv is per bloom,
     # i.e. per row group): unsized blooms measured a ~30% row-group
-    # false-positive rate at 256× (bench/BLOOMCOLD_x256_r12.json probes the
-    # sizing), which triples the bytes a cold point-lookup requests.
+    # false-positive rate at 256× (bench/BLOOMCOLD_x256_r12.json, commit
+    # 29e328a, probes the sizing), which triples the bytes a cold
+    # point-lookup requests.
     from duckdb_ml_spark.sources.readers import parquet_num_rows
 
     # footer-only row count (r12 review: a full count() job ran on every
     # build of this _EXEC_AT_BUILD query, even with the layout cached)
     n_rows = parquet_num_rows(_os.path.join(sf_dir, "orders.parquet"))
     ndv = max(1024, n_rows // 32)
-    out = layout_cache_dir(sf_dir, "orders.parquet", "orders_bloom", params=f"ndv{ndv}")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        bloom_write(
-            orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
-            "o_orderkey", out, ndv=ndv,
-        )
+    cols = ("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
+    out = derived_dir(
+        sf_dir, ["orders"], "orders_bloom",
+        lambda d: bloom_write(orders.select(*cols), "o_orderkey", d, ndv=ndv),
+        params=f"ndv{ndv}",
+    )
     back = spark.read.parquet(out)
     return (
         back.where(F.col("o_orderkey").isin(*[int(k) for k in keys]))
@@ -524,7 +459,7 @@ def adaptive_salted_join(
     is the plain fact-fact shuffle join, and that constant does not
     optimize away — at 1024× (614 M ⋈ 154 M) it measures 59.5 s warm /
     144.9 s cold. The repo's answer for joins that REPEAT on a key is the
-    LAYOUT, not salting: `sources.readers.write_bucketed` both sides once
+    LAYOUT, not salting: `sources.readers.bucketed_table` both sides once
     (87.7 s at 1024×) and every subsequent join is bucket-aligned and
     exchange-free — 33.1 s, 1.8× faster than the warm shuffle join, paying
     the write off within two joins (bench/BUCKETJOIN_x1024_r9.json;

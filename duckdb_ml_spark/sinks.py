@@ -1,16 +1,18 @@
-"""Sinks: partitioned parquet, bucketed tables, CSV/JSONL exports.
+"""Sinks: partitioned parquet, merges, compaction, tokenized shards.
 
 The reference has no write surface (its only artifact is model weights); these
 are the sinks a 100 TB training-data pipeline needs:
 
 - `write_parquet_partitioned` — hive-style directory partitioning: partition
   pruning makes `WHERE pcol = x` skip whole directories at the scan.
-- `write_bucketed_table` — pre-shuffled, co-located storage: joins and
-  aggregations on the bucket key need NO exchange at read time (verified by
-  plan-shape test: tests/test_scale.py). This is the canonical way to amortize
-  one shuffle across many downstream joins of the same key.
-- `write_csv` / `write_jsonl` — interchange exports (roundtrip-checked against
-  the DuckDB oracle via sources/readers.py queries).
+- `merge_upsert_parquet` / `merge_upsert_partitioned` — MERGE INTO over
+  parquet targets, the latter rewriting only the partitions a batch touches;
+  `foreach_batch_upsert` applies the merge to each streaming micro-batch.
+- `compact_small_files` — small-file compaction to size-targeted files.
+- `write_token_shards` / `read_token_shards_manifest` — binary tokenized
+  training shards and their decoded readback.
+
+Bucketed layouts are `sources.readers.bucketed_table`.
 """
 
 from __future__ import annotations
@@ -25,38 +27,6 @@ def write_parquet_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:
     df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
-
-    Readers joining/grouping on `bucket_col` with a table bucketed the same way
-    skip the exchange entirely — at 100 TB that is the difference between a
-    full-corpus shuffle per join and zero."""
-    if mode == "overwrite":
-        # clear both the catalog entry and any orphaned location (a managed
-        # table dir left by a previous session fails LOCATION_ALREADY_EXISTS)
-        spark = df.sparkSession
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(wh.removeprefix("file:"), name.split(".")[-1])
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-    # repartition on the bucket column first: bucketBy alone emits
-    # (input-tasks × buckets) files and multi-file buckets lose their sort
-    # guarantee, forcing downstream SortMergeJoins to re-sort every bucket
-    # (same fix as sources.readers.write_bucketed, measured at 2048×)
-    w = df.repartition(n_buckets, bucket_col).write.bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.mode(mode).format("parquet").saveAsTable(name)
 
 
 def foreach_batch_upsert(
@@ -246,14 +216,6 @@ def compact_small_files(
     df = spark.read.parquet(in_dir)
     df.coalesce(n_out).sortWithinPartitions(*df.columns).write.mode("overwrite").parquet(out_dir)
     return sum(1 for f in os.listdir(out_dir) if f.endswith(".parquet"))
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", **options) -> None:
-    df.write.options(header=True, **options).mode(mode).csv(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite", **options) -> None:
-    df.write.options(**options).mode(mode).json(path)
 
 
 # --- binary tokenized training shards ----------------------------------------

@@ -938,7 +938,7 @@ def test_importance_sample_respects_probabilities(spark):
     assert a == b
 
 
-def test_ivf_index_prunes_partitions_and_matches_fresh(spark, sf_dir, tmp_path):
+def test_ivf_index_prunes_partitions_and_matches_fresh(spark, sf_dir):
     """The persisted index's query scan must carry a bucket PartitionFilter
     (directory pruning — the point of partitioning the assignment table) and
     return exactly the fresh-build ivf_topk rows."""
@@ -953,8 +953,7 @@ def test_ivf_index_prunes_partitions_and_matches_fresh(spark, sf_dir, tmp_path):
     from duckdb_ml_spark.operators.vec import embedding_dim
     from duckdb_ml_spark.tables import load
 
-    path = str(tmp_path / "ivf")
-    build_ivf_index(spark, sf_dir, path)
+    path = build_ivf_index(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     got = ivf_topk_from_index(spark, sf_dir, path, queries)

@@ -1,5 +1,5 @@
-"""Scale-machinery tests: bucketed co-located joins (no exchange in plan),
-salted aggregation/join equivalence, partitioned sink layout, skew profiler.
+"""Scale-machinery tests: bucketed layouts and their registration, salted
+aggregation/join equivalence, partitioned sink layout, skew profiler.
 """
 
 from __future__ import annotations
@@ -9,29 +9,6 @@ import os
 from pyspark.sql import functions as F
 
 from duckdb_ml_spark.tables import load
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
-    """Two tables bucketed on the join key must join with zero Exchange nodes —
-    the one-shuffle-amortized-forever storage layout for 100 TB joins."""
-    from duckdb_ml_spark.sinks import write_bucketed_table
-
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed_table(orders, "t_orders_b", "o_orderkey", n_buckets=8)
-    write_bucketed_table(li.withColumnRenamed("l_orderkey", "o_orderkey"), "t_lineitem_b", "o_orderkey", n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force the merge path
-    try:
-        a = spark.table("t_orders_b")
-        b = spark.table("t_lineitem_b")
-        joined = a.join(b, "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan  # no shuffle: bucket co-location
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_salted_agg_equals_plain(spark, sf_dir):
@@ -328,141 +305,51 @@ def test_revenue_bucketed_branch_equals_plain(spark, sf_dir, monkeypatch):
     assert {tuple(r) for r in out.collect()} == plain
 
 
-def test_write_bucketed_validates_marker_and_registration(spark, sf_dir, tmp_path):
-    """ADVICE r12 (both medium items): (a) the layout marker persists the
-    written (key, n_buckets) and a re-register with mismatched arguments
-    REWRITES instead of trusting the caller — a lied-about bucket count
-    would let a zero-exchange bucket-aligned SMJ silently misroute rows;
-    (b) a registered table dangling over a superseded location is dropped
-    and re-registered instead of scanning a deleted dir."""
-    import json
-    import os
+def test_bucketed_table_names_one_layout_and_reregisters(spark, sf_dir, tmp_path, monkeypatch):
+    """A table name maps to exactly one layout directory: a different bucket
+    count gives a different directory and table, each reporting its own
+    bucket count (a re-register can never mis-describe the bucket hash). A
+    second call after DROP TABLE, or from another session, registers over
+    the existing layout without rewriting it."""
+    from duckdb_ml_spark import memo
+    from duckdb_ml_spark.sources.readers import bucketed_table
 
-    from duckdb_ml_spark.sources.readers import write_bucketed
+    monkeypatch.setattr(memo, "_TMP", str(tmp_path))
 
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    out = str(tmp_path / "lay1")
-    spark.sql("DROP TABLE IF EXISTS t_val_b")
-    write_bucketed(orders, "t_val_b", "o_orderkey", out, n_buckets=4)
-    marker = os.path.join(out, "_LAYOUT_FILE_PER_BUCKET")
-    assert json.load(open(marker)) == {"key": "o_orderkey", "n_buckets": 4}
+    def detail(t, row):
+        return next(r[1] for r in spark.sql(f"DESCRIBE FORMATTED {t}").collect() if r[0] == row)
 
-    # (a) same dir, DIFFERENT n_buckets: must rewrite the layout (marker
-    # updated, table reports 8 buckets), never re-register 4-bucket files as 8
-    spark.sql("DROP TABLE IF EXISTS t_val_b")
-    write_bucketed(orders, "t_val_b", "o_orderkey", out, n_buckets=8)
-    assert json.load(open(marker)) == {"key": "o_orderkey", "n_buckets": 8}
-    detail = spark.sql("DESCRIBE FORMATTED t_val_b").collect()
-    nb = next(r[1] for r in detail if r[0] == "Num Buckets")
-    assert nb.strip() == "8"
+    def files(t):
+        loc = detail(t, "Location").removeprefix("file:")
+        return os.stat(loc).st_ino, sorted(os.listdir(loc))
 
-    # matching args re-register over the completed layout (amortized path)
-    spark.sql("DROP TABLE IF EXISTS t_val_b")
-    write_bucketed(orders, "t_val_b", "o_orderkey", out, n_buckets=8)
-    assert spark.table("t_val_b").count() == orders.count()
+    def orders(session):
+        return load(session, sf_dir, "orders").select("o_orderkey", "o_totalprice")
 
-    # ADVICE r13: a SAME-SESSION second call (table still registered at the
-    # matching location) with different n_buckets must also rewrite — the
-    # old early-return skipped the marker validation entirely
-    write_bucketed(orders, "t_val_b", "o_orderkey", out, n_buckets=4)
-    assert json.load(open(marker)) == {"key": "o_orderkey", "n_buckets": 4}
-    detail = spark.sql("DESCRIBE FORMATTED t_val_b").collect()
-    nb = next(r[1] for r in detail if r[0] == "Num Buckets")
-    assert nb.strip() == "4"
+    n = orders(spark).count()
+    t4 = bucketed_table(spark, sf_dir, orders(spark), "o_orderkey", "t_val_b", 4, ["orders"])
+    t8 = bucketed_table(spark, sf_dir, orders(spark), "o_orderkey", "t_val_b", 8, ["orders"])
+    try:
+        assert t4 != t8
+        assert detail(t4, "Location") != detail(t8, "Location")
+        assert detail(t4, "Num Buckets").strip() == "4"
+        assert detail(t8, "Num Buckets").strip() == "8"
+        written = files(t8)
+        assert sum(f.endswith(".parquet") for f in written[1]) == 8  # one file per bucket
 
-    # (b) registered name now asked to live at a NEW location: the dangling
-    # registration is dropped and the table re-registered at out2
-    out2 = str(tmp_path / "lay2")
-    write_bucketed(orders, "t_val_b", "o_orderkey", out2, n_buckets=8)
-    loc = (
-        spark.sql("DESCRIBE FORMATTED t_val_b")
-        .where("col_name = 'Location'")
-        .head()[1]
-    )
-    assert os.path.realpath(loc.removeprefix("file:")) == os.path.realpath(out2)
-    assert spark.table("t_val_b").count() == orders.count()
-    spark.sql("DROP TABLE IF EXISTS t_val_b")
+        spark.sql(f"DROP TABLE {t8}")
+        assert bucketed_table(spark, sf_dir, orders(spark), "o_orderkey", "t_val_b", 8, ["orders"]) == t8
+        assert files(t8) == written
+        assert detail(t8, "Num Buckets").strip() == "8"
+        assert spark.table(t8).count() == n
 
-
-def test_write_bucketed_migrates_pre_r13_empty_marker(spark, sf_dir, tmp_path):
-    """Layouts written before the marker carried metadata have an EMPTY
-    marker file: validation must treat them as unknown-params and REWRITE
-    once (repopulating the marker), never re-register blind — the one-time
-    migration the r13 256x suite paid for its cached layouts."""
-    import json
-    import os
-
-    from duckdb_ml_spark.sources.readers import write_bucketed
-
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    out = str(tmp_path / "lay_legacy")
-    spark.sql("DROP TABLE IF EXISTS t_mig_b")
-    write_bucketed(orders, "t_mig_b", "o_orderkey", out, n_buckets=4)
-    marker = os.path.join(out, "_LAYOUT_FILE_PER_BUCKET")
-    open(marker, "w").close()  # simulate the pre-r13 empty marker
-    spark.sql("DROP TABLE IF EXISTS t_mig_b")
-    write_bucketed(orders, "t_mig_b", "o_orderkey", out, n_buckets=4)
-    assert json.load(open(marker)) == {"key": "o_orderkey", "n_buckets": 4}
-    assert spark.table("t_mig_b").count() == orders.count()
-    spark.sql("DROP TABLE IF EXISTS t_mig_b")
-
-
-def test_layout_cache_dir_fingerprints_every_source_and_evicts(tmp_path, monkeypatch):
-    """r12 review + ADVICE r12 fixes pinned: (a) the cache dir changes when
-    ANY source table's content changes — including a secondary input like
-    supplier — so a regenerated table can never re-register a stale derived
-    layout; (b) a superseded fingerprint dir is evicted only AFTER the new
-    dir is complete (_SUCCESS) and only once it has gone cold (>6h mtime) —
-    a failed write after an eager eviction would leave no usable layout, and
-    a concurrent session may hold a live table over the old dir; (c) layout
-    params are part of the key; (d) other layout names are never touched."""
-    import os
-    import time
-    from pathlib import Path
-
-    from duckdb_ml_spark.plans.scale import layout_cache_dir
-
-    sf = tmp_path / "sfX"
-    sf.mkdir()
-    (sf / "lineitem.parquet").write_bytes(b"AAAA")
-    (sf / "supplier.parquet").write_bytes(b"BBBB")
-
-    d1 = layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay")
-    os.makedirs(d1, exist_ok=True)
-    (Path(d1) / "_SUCCESS").touch()
-
-    # change ONLY the secondary source → new dir; the old one SURVIVES while
-    # the new dir is incomplete (no _SUCCESS yet — eviction would strand us)
-    time.sleep(0.01)
-    (sf / "supplier.parquet").write_bytes(b"BBBB2")
-    d2 = layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay")
-    assert d2 != d1
-    assert os.path.exists(d1), "must not evict before the new layout completes"
-
-    # new dir completes, but d1 is younger than the 6h TTL → still survives
-    os.makedirs(d2, exist_ok=True)
-    (Path(d2) / "_SUCCESS").touch()
-    layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay")
-    assert os.path.exists(d1), "must not evict a sibling younger than the TTL"
-
-    # age d1 past the TTL → reaped on the next call
-    old = time.time() - 7 * 3600
-    os.utime(d1, (old, old))
-    layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay")
-    assert not os.path.exists(d1), "cold superseded fingerprint must be evicted"
-
-    # params are part of the key; other layout names are never touched
-    d3 = layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay", params="nb64")
-    assert d3 != d2
-    other = layout_cache_dir(str(sf), ["lineitem.parquet"], "other_lay")
-    os.makedirs(other, exist_ok=True)
-    os.utime(other, (old, old))
-    os.makedirs(d3, exist_ok=True)
-    (Path(d3) / "_SUCCESS").touch()
-    os.utime(d2, (old, old))
-    layout_cache_dir(str(sf), ["lineitem.parquet", "supplier.parquet"], "lay", params="nb64")
-    assert not os.path.exists(d2), "cold superseded sibling (params differ) evicted"
-    assert os.path.exists(other), "eviction must not touch other layout names"
+        other = spark.newSession()
+        assert bucketed_table(other, sf_dir, orders(other), "o_orderkey", "t_val_b", 8, ["orders"]) == t8
+        assert files(t8) == written
+        assert other.table(t8).count() == n
+    finally:
+        for t in (t4, t8):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_layout_advise_regimes(spark, sf_dir, tmp_path, monkeypatch):

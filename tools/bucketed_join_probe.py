@@ -6,7 +6,7 @@ Context: `skew_salted_join` at 1024× (614 M lineitem ⋈ 154 M orders) measured
 59.5 s vs DuckDB's 8.1 s (bench/SCALEUP_x1024_r8d_new.json). With no hot keys
 the adaptive path degenerates to the plain shuffle join — both fact sides
 exchange + sort. The repo already owns the scale-safe alternative
-(sources.readers.write_bucketed → exchange-free bucket-aligned SortMergeJoin,
+(sources.readers.bucketed_table → exchange-free bucket-aligned SortMergeJoin,
 plan-asserted at sf0.1); this probe measures it AT the 1024× scale the
 verdict flagged:
 
