@@ -42,17 +42,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot / (F.sqrt(na) * F.sqrt(nb))
 
 
-def _flat(df: DataFrame, id_alias: str, prefix: str, dim: int, id_col: str = "vec_id") -> DataFrame:
-    """(id, {prefix}0..{dim-1}, n{prefix}) — unpacked doubles + squared norm."""
-    from duckdb_ml_spark.operators.vec import sqnorm, unpack
-
-    flat = unpack(
-        df.select(F.col(id_col).alias(id_alias), "embedding"),
-        "embedding", dim, prefix, keep=[id_alias],
-    )
-    return flat.select("*", sqnorm(prefix, dim).alias(f"n{prefix}"))
-
-
 def brute_force_topk(
     emb: DataFrame, queries: DataFrame, k: int = TOP_K, id_col: str = "vec_id",
     dim: int | None = None, cache_key=None,

@@ -1159,7 +1159,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The nation equality is applied as a post-join filter; Catalyst folds
     # it back into the join keys, which the session's subset-co-partitioning
     # config (session.py) accepts against the orderkey buckets. The one-time
-    # bucketed write re-registers from disk across sessions (write_bucketed).
+    # bucketed write re-registers from disk across sessions (bucketed_table).
     # sf0.1 lineitem is ~70 MB — far below the gate; the driver-gate plan and
     # hash are unchanged. r14 (VERDICT r13 item 5): the decision routes
     # through the shared layout advisor (same 1 GB gate + the hot-key check

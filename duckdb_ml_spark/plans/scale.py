@@ -462,10 +462,10 @@ def adaptive_salted_join(
     LAYOUT, not salting: `sources.readers.bucketed_table` both sides once
     (87.7 s at 1024×) and every subsequent join is bucket-aligned and
     exchange-free — 33.1 s, 1.8× faster than the warm shuffle join, paying
-    the write off within two joins (bench/BUCKETJOIN_x1024_r9.json;
-    tools/bucketed_join_probe.py reproduces). Salting remains the tool for
-    SKEWED keys; bucketing for repeated joins; they compose (bucket the
-    uniform mass, salt the hot tail)."""
+    the write off within two joins (bench/BUCKETJOIN_x1024_r9.json; the
+    probe was `git show b0841fa:tools/bucketed_join_probe.py`). Salting
+    remains the tool for SKEWED keys; bucketing for repeated joins; they
+    compose (bucket the uniform mass, salt the hot tail)."""
     def profile() -> list:
         cut = max(1, int(hot_threshold * sample_fraction / 2))
         return [

@@ -23,7 +23,8 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Below this input size the engine runs in "compact" mode: AQE off and few
-# shuffle partitions. Measured on the rig (tools/floor_probe.py, sf0.1):
+# shuffle partitions. Measured on the rig at sf0.1 (numbers below; the
+# probe was `git show b0841fa:tools/floor_probe.py`):
 # AQE executes every exchange as its own materialized query stage — a separate
 # job submission + re-plan per shuffle — which costs ~40% of a small query's
 # wall time (join+agg+sort floor 0.43 s AQE/32-part vs 0.25 s no-AQE/8-part)
@@ -98,7 +99,7 @@ def get_spark(
         # At cluster scale the trade flips and the default (true) is right.
         .config("spark.shuffle.compress", "false" if compact else "true")
         .config("spark.shuffle.spill.compress", "false" if compact else "true")
-        # Compact-mode floor shaves (measured, tools/floor_probe.py style: the
+        # Compact-mode floor shaves (measured as for COMPACT_INPUT_BYTES: the
         # pair cuts the 2-stage agg floor 150→118 ms, the noop job 50→29 ms):
         # locality.wait=0 — in single-node local mode every task is
         # PROCESS_LOCAL, so delay scheduling only ever adds waits; dynamic
@@ -126,7 +127,8 @@ def get_spark(
         # tables at sf0.1 otherwise scan as ONE serial task — events JSON
         # agg 403→299 ms), the 128 MB cap is Spark's cluster default.
         # Non-compact keeps the 128 MB cluster default ON PURPOSE (r11
-        # falsification, tools/scansplit_probe.py + bench/SCANSPLIT_x256_r11):
+        # falsification, bench/SCANSPLIT_x256_r11.json; the probe was
+        # `git show b0841fa:tools/scansplit_probe.py`):
         # data-scaling the split to ~total/128 (49 MB at 256×) wins ONLY on
         # the single widest pure-scan agg (pricing_summary 2.26→1.84 s, the
         # one query whose dominant fact otherwise gets 22 tasks on 32 cores)
@@ -174,7 +176,7 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float]:
     return int(count), nanos / 1e6
 
 
-_SHIPPED_CONTEXTS: set[int] = set()
+_SHIPPED_CONTEXTS: set[str] = set()
 
 
 def ensure_shipped(spark: SparkSession) -> None:
@@ -186,10 +188,11 @@ def ensure_shipped(spark: SparkSession) -> None:
     (pandas_udf/mapInPandas kernels) would raise ModuleNotFoundError at task
     time. Shipping a package zip via addPyFile fixes that through Spark's own
     file-distribution channel — the same mechanism a real cluster deploy uses.
-    Idempotent per SparkContext; zip is rebuilt only when missing."""
+    Once per SparkContext, named by its applicationId (a new context gets a
+    new id, where a Python `id()` may be reused): the zip is rewritten and
+    added on the first call in each context."""
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_CONTEXTS:
+    if sc.applicationId in _SHIPPED_CONTEXTS:
         return
     import zipfile
 
@@ -206,4 +209,4 @@ def ensure_shipped(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     zf.write(full, os.path.relpath(full, repo))
     sc.addPyFile(zip_path)
-    _SHIPPED_CONTEXTS.add(key)
+    _SHIPPED_CONTEXTS.add(sc.applicationId)

@@ -1,7 +1,11 @@
 """bench.py harness pieces that must never cost the suite: the contention
-sentinel's gate (pure, no Spark) and its probe job under ANSI mode."""
+sentinel's gate (pure, no Spark), its probe job under ANSI mode, and the
+one-line stdout contract of a whole (narrowed) run."""
 
 from __future__ import annotations
+
+import json
+from pathlib import Path
 
 import bench
 from bench import SENTINEL_CEILING_S, flag_rows
@@ -48,3 +52,28 @@ def test_sentinel_aggregate_runs_under_ansi(spark):
     finally:
         spark.conf.set("spark.sql.ansi.enabled", before)
     assert isinstance(row.h, int)
+
+
+def test_main_prints_the_contract_line_and_keeps_the_committed_json(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    from duckdb_ml_spark import session
+
+    committed = Path(bench.__file__).parent / "bench" / "BENCH_FULL_latest.json"
+    before = committed.read_bytes()
+    rows = {"pricing_summary", "events_hourly"}
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("BENCH_ONLY", ",".join(sorted(rows)))
+    monkeypatch.setenv("BENCH_RUNS", "1")
+    # the run's full JSON goes under tmp_path; the fixture session serves it
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+
+    assert bench.main() == 0
+    result = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(result["queries"]) == rows
+    assert result["n_failed"] == 0
+    assert isinstance(result["sentinel_flagged"], list)
+    full = json.loads((tmp_path / "bench" / "BENCH_FULL_latest.json").read_text())
+    assert full["queries"] == result["queries"]
+    assert committed.read_bytes() == before

@@ -14,9 +14,11 @@ Derivation (deterministic, documented):
   key columns shifted by i·stride (join integrity preserved: l_orderkey and
   o_orderkey shift together); `documents.text` gets a per-replica suffix token
   so replicas are near-dups, not byte-dups (keeps dedup semantics meaningful);
-- dims `region`/`nation`/`customer`/`supplier`/`part` and `embeddings` are
-  copied unchanged (dims grow slowly in practice; the vector family's
-  above-gate behavior is covered by strategy-equivalence pytests instead).
+- `embeddings` is unioned FACTOR times the same way (vec_id shifted, vectors
+  perturbed per replica), so the similarity serving family crosses its
+  65 536-row collect gates at 64×;
+- dims `region`/`nation`/`customer`/`supplier`/`part` are copied unchanged
+  (dims grow slowly in practice).
 
 FACTOR = 16 puts `documents` at 80 000 rows — ABOVE the 65 536 signature- and
 matrix-collect gates, so this probe exercises the distributed (banded/shuffle)
@@ -25,8 +27,10 @@ claims survive 100 TB.
 
 Usage:
     python tools/scaleup_bench.py [--factor 16] [--runs 2] [--only q1,q2]
-Writes derived parquet under .tmp/sfx<factor>/ (reused if present); prints one
-JSON line {spark: {q: sec}, duckdb: {q: sec}, totals...}.
+The derived parquet is one `memo.derived_dir` of the sf0.1 input,
+`.tmp/sf0.1/sfx<factor>-<fp>/`, named by the source tables' files and the
+factor: reused while they are unchanged, derived again when one moves.
+Prints one JSON line {spark: {q: sec}, duckdb: {q: sec}, totals...}.
 """
 
 from __future__ import annotations
@@ -40,17 +44,18 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-REPO = Path(__file__).resolve().parent.parent
 SRC_SF = "/root/testdata/sf0.1"
 
-DIMS = ("region", "nation", "customer", "supplier", "part", "embeddings")
+DIMS = ("region", "nation", "customer", "supplier", "part")
 KEY_SHIFTS = {
     # table -> [(column, stride)]
     "orders": [("o_orderkey", 10_000_000)],
     "lineitem": [("l_orderkey", 10_000_000)],
     "events": [("event_id", 10_000_000)],
     "documents": [("doc_id", 1_000_000)],
+    "embeddings": [("vec_id", 1_000_000)],
 }
+TABLES = DIMS + tuple(KEY_SHIFTS)
 
 # Representative, data-bound subset: scans/aggs/windows on every fact table,
 # the decontam family (shared shingle index at 16x), the dedup families on
@@ -155,64 +160,42 @@ DEFAULT_QUERIES = [
 DUCK_MAX_FACTOR = {"dedup_semantic_sampled": 64}
 
 
-def build_derived(out_dir: Path, factor: int) -> None:
-    import duckdb
-
-    out_dir.mkdir(parents=True, exist_ok=True)
-    marker = out_dir / "_DERIVED"
-    if marker.exists():
-        return
-    con = duckdb.connect()
-    # the FACTOR-branch UNION ALL exceeds the default parser depth of 1000
-    # at factor >= ~250; scale the limit with the factor
-    con.execute(f"SET max_expression_depth TO {max(1000, factor * 8)}")
-    for t in DIMS:
-        con.execute(
-            f"COPY (SELECT * FROM '{SRC_SF}/{t}.parquet') TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    for t, shifts in KEY_SHIFTS.items():
-        parts = []
-        for i in range(factor):
-            cols = ["*"]
-            replace = ", ".join(
-                f"{col} + {i * stride} AS {col}" for col, stride in shifts
+def _derived_sql(src_sf: str, t: str, factor: int) -> str:
+    src = f"'{src_sf}/{t}.parquet'"
+    if t in DIMS:
+        return f"SELECT * FROM {src}"
+    parts = []
+    for i in range(factor):
+        replace = [f"{col} + {i * stride} AS {col}" for col, stride in KEY_SHIFTS[t]]
+        if t == "documents" and i > 0:
+            replace.append(f"text || ' rep{i}' AS text")
+        if t == "embeddings":
+            replace.append(
+                f"list_transform(embedding, x -> (x * (1.0 + {i} * 1e-6) + {i % 97} * 1e-7)::FLOAT) AS embedding"
             )
-            sel = f"SELECT * REPLACE ({replace})"
-            if t == "documents" and i > 0:
-                sel = sel.replace(
-                    "REPLACE (", f"REPLACE (text || ' rep{i}' AS text, "
+        parts.append(f"SELECT * REPLACE ({', '.join(replace)}) FROM {src}")
+    return " UNION ALL ".join(parts)
+
+
+def build_derived(src_sf: str, factor: int) -> str:
+    """The FACTOR-scaled copy of `src_sf`'s tables (module docstring), derived
+    once per content of its source tables and factor."""
+    from duckdb_ml_spark.memo import derived_dir
+
+    def write(out: str) -> None:
+        import duckdb
+
+        os.makedirs(out)
+        with duckdb.connect() as con:
+            # the FACTOR-branch UNION ALL exceeds the default parser depth
+            # of 1000 at factor >= ~250; scale the limit with the factor
+            con.execute(f"SET max_expression_depth TO {max(1000, factor * 8)}")
+            for t in TABLES:
+                con.execute(
+                    f"COPY ({_derived_sql(src_sf, t, factor)}) TO '{out}/{t}.parquet' (FORMAT PARQUET)"
                 )
-            parts.append(f"{sel} FROM '{SRC_SF}/{t}.parquet'")
-        union = " UNION ALL ".join(parts)
-        con.execute(f"COPY ({union}) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)")
-    marker.touch()
 
-
-def scale_embeddings(out_dir: Path, factor: int) -> None:
-    """Replace the dim-copied embeddings table with a FACTOR-replicated one
-    (vec_id shifted, vectors perturbed per replica so replicas are near- but
-    not exact-duplicates) — gives the similarity SERVING family real above-
-    gate scale behavior (65 536-row collect gates cross at 64×). Separate
-    marker so existing fact caches (24 GB at 1024×) are not re-derived."""
-    import duckdb
-
-    marker = out_dir / "_EMB_SCALED"
-    if marker.exists():
-        return
-    con = duckdb.connect()
-    con.execute(f"SET max_expression_depth TO {max(1000, factor * 8)}")
-    parts = [
-        f"SELECT vec_id + {i * 1_000_000} AS vec_id, "
-        f"list_transform(embedding, x -> (x * (1.0 + {i} * 1e-6) + {i % 97} * 1e-7)::FLOAT) AS embedding, "
-        f"label "
-        f"FROM '{SRC_SF}/embeddings.parquet'"
-        for i in range(factor)
-    ]
-    union = " UNION ALL ".join(parts)
-    con.execute(
-        f"COPY ({union}) TO '{out_dir}/embeddings.parquet' (FORMAT PARQUET)"
-    )
-    marker.touch()
+    return derived_dir(src_sf, TABLES, f"sfx{factor}", write, params=str(factor))
 
 
 def main() -> int:
@@ -223,10 +206,8 @@ def main() -> int:
     ap.add_argument("--skip-duck", action="store_true")
     args = ap.parse_args()
 
-    out_dir = REPO / ".tmp" / f"sfx{args.factor}"
     t0 = time.time()
-    build_derived(out_dir, args.factor)
-    scale_embeddings(out_dir, args.factor)
+    out_dir = build_derived(SRC_SF, args.factor)
     print(f"derived data ready in {time.time() - t0:.1f}s: {out_dir}", file=sys.stderr)
 
     names = args.only.split(",") if args.only else DEFAULT_QUERIES
@@ -237,7 +218,7 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    spark = get_spark("scaleup", sf_dir=str(out_dir))
+    spark = get_spark("scaleup", sf_dir=out_dir)
     spark.sparkContext.setLogLevel("ERROR")
 
     s_times: dict[str, float] = {}
@@ -246,7 +227,7 @@ def main() -> int:
         try:
             for _ in range(args.runs):
                 t1 = time.time()
-                qs[name](spark, str(out_dir)).write.format("noop").mode("overwrite").save()
+                qs[name](spark, out_dir).write.format("noop").mode("overwrite").save()
                 dt = time.time() - t1
                 best = dt if best < 0 else min(best, dt)
             s_times[name] = round(best, 3)
@@ -259,7 +240,7 @@ def main() -> int:
 
     d_times: dict[str, float] = {}
     if not args.skip_duck:
-        con = duckdb_connection(str(out_dir))
+        con = duckdb_connection(out_dir)
         for name in names:
             if name not in oracles:
                 continue
