@@ -58,6 +58,20 @@ PQ_SHORTLIST = 50  # ADC candidates per query fed to the recall check
 RECALL_MIN = 0.8  # shortlist must contain >= this fraction of the true top-k
 
 
+def _sq_dists(sub, C):
+    """(n, k) squared l2 distances from each row of sub (n, dsub) to each
+    centroid of C (k, dsub), summed over the dsub columns left to right in
+    (n, k) arrays. numpy sums fewer than 8 elements left to right too, so for
+    the engine's dsub (4 and 2) this is bit-identical to
+    ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2) without its
+    (n, k, dsub) temporary (n=500 codebooks, 8 iterations: m=16 0.51 -> 0.25 s,
+    m=32 0.89 -> 0.35 s)."""
+    d2 = (sub[:, 0:1] - C[None, :, 0]) ** 2
+    for c in range(1, sub.shape[1]):
+        d2 += (sub[:, c:c + 1] - C[None, :, c]) ** 2
+    return d2
+
+
 def train_pq_codebooks(X, m: int = PQ_M, k: int = PQ_K, seed: int = PQ_SEED,
                        iters: int = PQ_ITERS):
     """(m, k, d/m) float64 codebooks via per-subspace Lloyd's k-means.
@@ -78,9 +92,7 @@ def train_pq_codebooks(X, m: int = PQ_M, k: int = PQ_K, seed: int = PQ_SEED,
         sub = X[:, s * dsub:(s + 1) * dsub]
         C = sub[rs.permutation(n)[:k]].copy()
         for _ in range(iters):
-            # (n, k) squared distances; argmin ties -> lowest index
-            d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
+            a = np.argmin(_sq_dists(sub, C), axis=1)  # ties -> lowest index
             # per-centroid means from bincount sums: each sum accumulates its
             # points in row order, as sub[a == j].mean(axis=0) does, so the
             # codebooks are byte-identical to the per-centroid loop's
@@ -135,8 +147,7 @@ def _encode_batch(X, books):
     codes = np.empty((len(X), m), dtype=np.int64)
     for s in range(m):
         sub = X[:, s * dsub:(s + 1) * dsub]
-        d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = np.argmin(d2, axis=1)
+        codes[:, s] = np.argmin(_sq_dists(sub, books[s]), axis=1)
     return codes, l2
 
 

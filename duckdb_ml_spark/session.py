@@ -12,13 +12,43 @@ every setting is chosen to also be the right default on a large cluster:
   Spark's 100, so a session's repeated queries reuse their compiled classes:
   the 172 registry rows at sf0.01 generate 1,403 distinct classes, and at the
   default cap each warm benchmark pass recompiled 207-229 of them.
+
+One process-level default rides on importing this module (the package
+`__init__` does): on Python < 3.12, `importlib.invalidate_caches()` re-reads a
+zip archive's directory only when the archive changed on disk (below).
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+if sys.version_info < (3, 12):
+    import zipimport
+
+    # PySpark's worker calls importlib.invalidate_caches() at every task start,
+    # and before 3.12 each zipimporter then re-parses its archive's central
+    # directory. A worker holds 17 zipimporters, 12 into pyspark.zip (1,328
+    # entries), so every Python task paid 0.13-0.24 s for it whatever its data
+    # (measured on 4 cores: a trivial 4-partition mapInPandas stage took
+    # 0.27-0.29 s, 0.185 s with this; the benchmark's pipeline_cold
+    # query_p50_s fell 36%). Re-read only when the archive's (mtime, size)
+    # differs from what this importer last read, so a zip rewritten in place
+    # is still re-read. A worker imports this module when it unpickles an
+    # engine kernel; every later task in that reused worker skips the reads.
+    def _invalidate_if_changed(self, _eager=zipimport.zipimporter.invalidate_caches):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            _eager(self)
+            self._read_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

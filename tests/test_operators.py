@@ -1071,6 +1071,30 @@ def test_pq_codebooks_byte_identical_to_loop_reference(n, m, distinct):
     assert got.tobytes() == want.tobytes()
 
 
+@pytest.mark.parametrize("m", [16, 32])  # PQ_M, IVFPQ_M: 4 and 2 dims per subspace
+def test_pq_encode_batch_codes_equal_the_3d_distance_form(m):
+    import numpy as np
+
+    from duckdb_ml_spark.operators.pq import _encode_batch, train_pq_codebooks
+
+    rs = np.random.RandomState(m)
+    books = train_pq_codebooks(rs.randn(500, 64), m=m)
+    X = rs.randn(700, 64)
+    codes, _ = _encode_batch(X, books)
+    dsub = 64 // m
+    want = np.stack(
+        [
+            np.argmin(
+                ((X[:, s * dsub:(s + 1) * dsub][:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2),
+                axis=1,
+            )
+            for s in range(m)
+        ],
+        axis=1,
+    )
+    assert codes.tobytes() == want.tobytes()
+
+
 def test_pq_encode_matches_numpy_argmin(spark, sf_dir):
     import numpy as np
 
