@@ -58,10 +58,6 @@ def unpack(df: DataFrame, arr_col: str, dim: int, prefix: str, keep: list[str]) 
     return df.select(*keep, *cols)
 
 
-def sqnorm(prefix: str, dim: int) -> Column:
-    return seq_sum([F.col(f"{prefix}{i}") * F.col(f"{prefix}{i}") for i in range(dim)])
-
-
 def dot(pa: str, pb: str, dim: int) -> Column:
     return seq_sum([F.col(f"{pa}{i}") * F.col(f"{pb}{i}") for i in range(dim)])
 

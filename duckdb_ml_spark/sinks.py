@@ -1,18 +1,18 @@
-"""Sinks: partitioned parquet, merges, compaction, tokenized shards.
+"""Sinks: merges, compaction, tokenized shards.
 
 The reference has no write surface (its only artifact is model weights); these
 are the sinks a 100 TB training-data pipeline needs:
 
-- `write_parquet_partitioned` — hive-style directory partitioning: partition
-  pruning makes `WHERE pcol = x` skip whole directories at the scan.
-- `merge_upsert_parquet` / `merge_upsert_partitioned` — MERGE INTO over
-  parquet targets, the latter rewriting only the partitions a batch touches;
-  `foreach_batch_upsert` applies the merge to each streaming micro-batch.
+- `merge_upsert_partitioned` — the one MERGE INTO over parquet targets: a
+  hive-partitioned target rewrites only the partitions a batch touches, a
+  flat one (`partition_col=None`) is rewritten whole;
+  `foreach_batch_upsert` applies it to each streaming micro-batch.
 - `compact_small_files` — small-file compaction to size-targeted files.
 - `write_token_shards` / `read_token_shards_manifest` — binary tokenized
   training shards and their decoded readback.
 
-Bucketed layouts are `sources.readers.bucketed_table`.
+Hive-partitioned writes are `df.write.partitionBy(...)`; bucketed layouts
+are `sources.readers.bucketed_table`.
 """
 
 from __future__ import annotations
@@ -23,22 +23,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-
-
 def foreach_batch_upsert(
-    stream_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    checkpoint: str,
-    trigger_available_now: bool = True,
+    stream_df: DataFrame, path: str, key_cols: list[str], checkpoint: str
 ):
     """Streaming UPSERT sink via foreachBatch: each micro-batch is merged into
-    a keyed parquet target — new keys appended, existing keys replaced by the
-    batch's row (last-writer-wins within a batch via dropDuplicates on key).
+    a flat keyed parquet target — new keys appended, existing keys replaced
+    by the batch's row (last-writer-wins within a batch via dropDuplicates on
+    key).
 
     This is the idempotent-sink pattern for engines without a MERGE-capable
     table format on the classpath: foreachBatch hands the micro-batch to
@@ -48,47 +39,20 @@ def foreach_batch_upsert(
     INTO; the streaming-side contract (exactly-once per epoch via the
     checkpointed batch id) is identical.
 
+    The query runs with `trigger(availableNow=True)`: it drains the input
+    available at start in as many micro-batches as needed, then stops.
     Returns the StreamingQuery; caller awaits termination."""
     spark = stream_df.sparkSession
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        # one merge body for batch and streaming (r5 dedup): foreachBatch's
-        # whole point is handing the micro-batch to ordinary batch code
-        merge_upsert_parquet(spark, path, batch_df, key_cols)
+        merge_upsert_partitioned(spark, path, batch_df, key_cols)
 
-    w = stream_df.writeStream.foreachBatch(_merge).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def merge_upsert_parquet(
-    spark: SparkSession, path: str, updates: DataFrame, key_cols: list[str]
-) -> None:
-    """Batch MERGE INTO over a keyed parquet target — the batch twin of
-    foreach_batch_upsert, sharing its copy-on-write contract: matched keys are
-    replaced by the update row (last-writer-wins inside `updates` via
-    dropDuplicates on key), unmatched update keys are inserted, everything
-    else is carried over; the rewrite is atomic (staging dir + rename).
-
-    This is exactly what Delta/Iceberg's MERGE compiles to on plain parquet:
-    copy-on-write of the affected files. At 100 TB use the partitioned form
-    (merge_upsert_partitioned below): this whole-table rewrite is the
-    unpartitioned fallback for small keyed tables."""
-    batch = updates.dropDuplicates(key_cols)
-    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-        cur = spark.read.parquet(path)
-        kept = cur.join(batch.select(*key_cols), on=key_cols, how="left_anti")
-        merged = kept.unionByName(batch)
-    else:
-        merged = batch
-    staging = path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + ".old"
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    return (
+        stream_df.writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merge_upsert_partitioned(
@@ -96,94 +60,117 @@ def merge_upsert_partitioned(
     path: str,
     updates: DataFrame,
     key_cols: list[str],
-    partition_col: str,
+    partition_col: str | None = None,
 ) -> list:
-    """Partition-restricted MERGE INTO over hive-partitioned parquet — the
-    100 TB upsert form (VERDICT r4 item 3): the read AND the rewrite are
-    pruned to the partitions that actually contain update keys; untouched
-    partitions' files are never opened, never rewritten (byte-identical —
-    pytest-asserted).
+    """MERGE INTO over a keyed parquet target, copy-on-write — what
+    Delta/Iceberg's MERGE compiles to on plain parquet: matched keys are
+    replaced by the update row (last-writer-wins inside `updates` via
+    dropDuplicates on key), unmatched update keys are inserted, everything
+    else is carried over.
+
+    The unit rewritten is one directory. With `partition_col` (the 100 TB
+    upsert form, VERDICT r4 item 3) it is each `<partition_col>=<v>`
+    directory holding update keys: the read AND the rewrite are pruned to
+    those partitions (`where(partition_col isin affected)` reaches the scan
+    as a PartitionFilter); untouched partitions' files are never opened,
+    never rewritten (byte-identical — pytest-asserted). With
+    `partition_col=None` the target is flat and the unit is the whole
+    directory.
 
     Plan: distinct update partition values (a collect bounded by the number
     of AFFECTED partitions — the production contract: a batch touches few
-    partitions of a huge table) → partition-pruned read of only those
-    directories (`where(partition_col isin affected)` reaches the scan as a
-    PartitionFilter) → anti-join carry + union (same merge body as the
-    unpartitioned form) → write to a partitioned staging dir → per-partition
-    directory rename. Per-partition atomicity, like Hive/Spark dynamic
-    partition overwrite (`partitionOverwriteMode=dynamic` compiles to the
-    same replace-matching-partitions commit; the explicit rename also avoids
+    partitions of a huge table) → read of the target's affected units →
+    anti-join carry + union → write to a staging dir → per-unit directory
+    rename. Per-unit atomicity, like Hive/Spark dynamic partition overwrite
+    (`partitionOverwriteMode=dynamic` compiles to the same
+    replace-matching-partitions commit; the explicit rename also avoids
     Spark's self-overwrite read/write conflict on the target path).
+
+    The batch must have the target's columns (any order): unionByName
+    raises on a missing or extra column instead of dropping it. The
+    target's layout must match `partition_col` (ADVICE r5, review r6): a
+    flat merge refuses a hive-partitioned target, a partitioned merge
+    refuses a flat one or one partitioned by another column — treating
+    either as empty would drop the carried rows or interleave layouts.
 
     Requires a key's partition value to be stable (a pure function of the
     key) — the standard upsert-table assumption; a key that 'moved'
     partitions would leave its old row behind.
 
     Returns the list of affected partition values (observability: the
-    pytest + callers assert rewrite scope)."""
+    pytest + callers assert rewrite scope); empty for a flat target."""
     from pyspark.sql import functions as F
 
     batch = updates.dropDuplicates(key_cols)
-    affected = sorted(
-        r[0] for r in batch.select(partition_col).distinct().collect()
-    )
-    # Hive dir names are built as f'{partition_col}={value}' below, which only
-    # matches Spark's on-disk escaping for integral values — a string needing
-    # URI escaping, a float, or a NULL (__HIVE_DEFAULT_PARTITION__) would
-    # produce a name that silently misses the staging dir and LOSE the
-    # update (ADVICE r5). Restrict and fail loudly.
-    for v in affected:
-        if v is None or isinstance(v, bool) or not isinstance(v, int):
+    entries = os.listdir(path) if os.path.isdir(path) else []
+    flat = any(f.endswith(".parquet") for f in entries)
+    hive = [d for d in entries if "=" in d]
+    if partition_col is None:
+        if hive:
             raise ValueError(
-                f"merge_upsert_partitioned requires integral non-null "
-                f"partition values (got {v!r}); string/float/null partition "
-                f"columns need Hive-escaped dir naming this sink does not do"
+                f"target {path} is hive-partitioned (found {hive[0]!r}); "
+                f"pass its partition_col"
             )
-    exists = os.path.isdir(path) and any(
-        d.startswith(f"{partition_col}=") for d in os.listdir(path)
-    )
-    if not exists and os.path.isdir(path):
-        # Treating a non-empty target as empty silently drops the carry-over
-        # rows and interleaves new partition dirs with the old layout —
-        # old+new rows side by side, duplicate keys on readback (ADVICE r5).
-        # Refuse BOTH corrupt-prone layouts: a flat parquet table, and a
-        # table hive-partitioned by a DIFFERENT column (review r6).
-        entries = os.listdir(path)
-        if any(f.endswith(".parquet") for f in entries):
+        affected, units, exists = [], [""], flat
+    else:
+        if flat:
             raise ValueError(
                 f"target {path} holds non-partitioned parquet files (no "
-                f"'{partition_col}=' directories); use merge_upsert_parquet "
-                f"for flat tables or migrate the layout first"
+                f"'{partition_col}=' directories); merge it with "
+                f"partition_col=None or migrate the layout first"
             )
-        other = [d for d in entries if "=" in d and not d.startswith(f"{partition_col}=")]
+        other = [d for d in hive if not d.startswith(f"{partition_col}=")]
         if other:
             raise ValueError(
                 f"target {path} is partitioned by a different column "
                 f"(found {other[0]!r}, expected '{partition_col}='); refusing "
                 f"to interleave layouts"
             )
+        affected = sorted(
+            r[0] for r in batch.select(partition_col).distinct().collect()
+        )
+        # Hive dir names are built as f'{partition_col}={value}' below, which
+        # only matches Spark's on-disk escaping for integral values — a string
+        # needing URI escaping, a float, or a NULL (__HIVE_DEFAULT_PARTITION__)
+        # would produce a name that silently misses the staging dir and LOSE
+        # the update (ADVICE r5). Restrict and fail loudly.
+        for v in affected:
+            if v is None or isinstance(v, bool) or not isinstance(v, int):
+                raise ValueError(
+                    f"merge_upsert_partitioned requires integral non-null "
+                    f"partition values (got {v!r}); string/float/null "
+                    f"partition columns need Hive-escaped dir naming this "
+                    f"sink does not do"
+                )
+        units = [f"{partition_col}={v}" for v in affected]
+        exists = bool(hive)
     if exists:
-        cur = spark.read.parquet(path).where(F.col(partition_col).isin(affected))
+        cur = spark.read.parquet(path)
+        if partition_col is not None:
+            cur = cur.where(F.col(partition_col).isin(affected))
         kept = cur.join(batch.select(*key_cols), on=key_cols, how="left_anti")
-        merged = kept.unionByName(batch.select(*cur.columns))
+        merged = kept.unionByName(batch)
     else:
         merged = batch
     staging = path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    os.makedirs(path, exist_ok=True)
-    for v in affected:
-        part_dir = f"{partition_col}={v}"
-        src, dst = os.path.join(staging, part_dir), os.path.join(path, part_dir)
+    writer = merged.write.mode("overwrite")
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(staging)
+    for unit in units:
+        src = os.path.normpath(os.path.join(staging, unit))
+        dst = os.path.normpath(os.path.join(path, unit))
         if not os.path.isdir(src):
-            # an affected value MUST have a staging dir (its batch rows were
+            # an affected unit MUST have a staging dir (its batch rows were
             # written there); a miss means dir-name/layout drift — failing
             # here keeps the target intact instead of dropping the update
             shutil.rmtree(staging, ignore_errors=True)
             raise RuntimeError(
-                f"staging dir missing for affected partition {part_dir}; "
+                f"staging dir missing for affected partition {unit}; "
                 f"this and later affected partitions were not applied "
                 f"(per-partition atomicity: earlier renames stand)"
             )
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
         old = dst + ".old"
         if os.path.isdir(dst):
             os.rename(dst, old)
@@ -445,10 +432,12 @@ def read_token_shards_manifest(
     rebuilds the same stream from the raw documents and the 31-word
     lexicon). Capped multi-shard sources (`shard_<src>__<i>.bin`) are
     reassembled in shard-index order, so the md5 equals the uncapped one
-    bit-for-bit (pytest-asserted). binaryFile source + one per-file Arrow
-    kernel; the per-source reassembly groups only (shard_i, decoded stream)
-    rows — the verification endpoint inherently serializes one source's
-    stream through one hash.
+    bit-for-bit (pytest-asserted). A driver-side listing of the `.bin`
+    files + one per-file Arrow kernel; the per-source reassembly groups only
+    (shard_i, decoded stream) rows — the verification endpoint inherently
+    serializes one source's stream through one hash. A directory with no
+    shards (an all-out-of-lexicon corpus) reads back as 0 rows, like the
+    oracle's inner join.
 
     per_shard=True (r9, VERDICT r8 item 2): skip the per-source reassembly
     and return ONE ROW PER FILE — (source, shard_i, n_tokens, n_seqs,
@@ -457,7 +446,6 @@ def read_token_shards_manifest(
     forensics-friendly shape the capped driver gate hashes: any future red
     localizes itself to a single shard instead of a per-source rollup."""
     import glob
-    import hashlib
 
     import numpy as np
     import pandas as pd
@@ -479,13 +467,9 @@ def read_token_shards_manifest(
                 "source": [], "shard_i": [], "n_tokens": [], "n_seqs": [],
                 "stream": [],
             }
-            contents = (
-                pdf["content"]
-                if "content" in pdf.columns
-                else [open(p, "rb").read() for p in pdf["path"]]
-            )
-            for path, content in zip(pdf["path"], contents):
-                ids = np.frombuffer(content, dtype="<u2")
+            for path in pdf["path"]:
+                with open(path, "rb") as f:
+                    ids = np.frombuffer(f.read(), dtype="<u2")
                 if len(ids) % seq_len != 0:
                     # a shard must be a whole number of sequences — anything
                     # else is a torn/foreign file; fail loudly, never decode
@@ -517,32 +501,17 @@ def read_token_shards_manifest(
     decode_schema = (
         "source string, shard_i int, n_tokens bigint, n_seqs bigint, stream string"
     )
-    local_bins = (
-        sorted(glob.glob(os.path.join(out_dir, "*.bin")))
-        if "://" not in out_dir
-        else []
-    )
-    if local_bins:
-        # Local/shared-POSIX layout (the writer's own storage contract — it
-        # writes through the filesystem API with os.replace): one scandir on
-        # the driver replaces binaryFile's InMemoryFileIndex, whose
-        # listing+DataFrame setup alone measured ~1.2 s warm for 535 tiny
-        # shards; the path list (~n_tokens/M rows) parallelizes across the
-        # default slices and each kernel task opens its own files.
-        decoded = spark.createDataFrame(
-            [(p,) for p in local_bins], "path string"
-        ).mapInPandas(gen, decode_schema)
-    else:
-        # Non-POSIX URI (hdfs:// etc.): binaryFile source. Its 4 MB
-        # openCostInBytes makes every small shard its own scan partition;
-        # coalesce merges the splits into at most one task per core with NO
-        # shuffle before the per-file decode kernel.
-        bins = spark.read.format("binaryFile").load(os.path.join(out_dir, "*.bin"))
-        n_coalesce = max(1, spark.sparkContext.defaultParallelism)
-        decoded = (
-            bins.select("path", "content").coalesce(n_coalesce)
-            .mapInPandas(gen, decode_schema)
-        )
+    # The writer's own storage contract is a local/shared-POSIX directory (it
+    # writes through the filesystem API with os.replace), so one listing on
+    # the driver serves every layout it produces, an empty one included. It
+    # replaces binaryFile's InMemoryFileIndex, whose listing+DataFrame setup
+    # alone measured ~1.2 s warm for 535 tiny shards; the path list
+    # (~n_tokens/M rows) parallelizes across the default slices and each
+    # kernel task opens its own files.
+    bins = sorted(glob.glob(os.path.join(out_dir, "*.bin")))
+    decoded = spark.createDataFrame(
+        [(p,) for p in bins], "path string"
+    ).mapInPandas(gen, decode_schema)
 
     if per_shard:
         from pyspark.sql import functions as F

@@ -127,12 +127,13 @@ def test_partitioned_scan_prunes_directories(spark, sf_dir):
 
 
 def test_merge_upsert_semantics(spark, tmp_path):
-    """merge_upsert_parquet: matched keys replaced, unmatched inserted,
-    others carried; last-writer-wins inside the update batch; atomic target
-    (no .staging/.old leftovers)."""
+    """merge_upsert_partitioned on a flat target (no partition column):
+    matched keys replaced, unmatched inserted, others carried;
+    last-writer-wins inside the update batch; atomic target (no
+    .staging/.old leftovers)."""
     import os
 
-    from duckdb_ml_spark.sinks import merge_upsert_parquet
+    from duckdb_ml_spark.sinks import merge_upsert_partitioned
 
     target = str(tmp_path / "t")
     base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, v string")
@@ -140,13 +141,13 @@ def test_merge_upsert_semantics(spark, tmp_path):
     updates = spark.createDataFrame(
         [(2, "B1"), (2, "B2"), (4, "d")], "k long, v string"
     )
-    merge_upsert_parquet(spark, target, updates, ["k"])
+    assert merge_upsert_partitioned(spark, target, updates, ["k"]) == []
     got = {r.k: r.v for r in spark.read.parquet(target).collect()}
     assert got[1] == "a" and got[3] == "c" and got[4] == "d"
     assert got[2] in ("B1", "B2")  # last-writer-wins is per-batch dedup
     assert not os.path.isdir(target + ".staging") and not os.path.isdir(target + ".old")
     # merging the same batch again is idempotent
-    merge_upsert_parquet(spark, target, updates, ["k"])
+    merge_upsert_partitioned(spark, target, updates, ["k"])
     assert {r.k: r.v for r in spark.read.parquet(target).collect()} == got
 
 
@@ -454,7 +455,9 @@ def test_exact_quantiles_ignore_nulls_and_mirror_key_type(spark):
 
 def test_partitioned_merge_refuses_other_partition_column(spark, tmp_path):
     """review r6: a target partitioned by a DIFFERENT column must be
-    refused, not treated as empty (the interleave corruption class)."""
+    refused, not treated as empty (the interleave corruption class) — and
+    so must a hive-partitioned target merged as a flat table, which would
+    otherwise be replaced by the batch alone."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -469,6 +472,38 @@ def test_partitioned_merge_refuses_other_partition_column(spark, tmp_path):
     base.write.partitionBy("region").parquet(target)
     with pytest.raises(ValueError, match="different column"):
         merge_upsert_partitioned(spark, target, base, ["k"], "part")
+
+    by_part = str(tmp_path / "by_part")
+    base.write.partitionBy("part").parquet(by_part)
+    with pytest.raises(ValueError, match="hive-partitioned"):
+        merge_upsert_partitioned(spark, by_part, base.limit(1), ["k"])
+    assert spark.read.parquet(by_part).count() == 16
+
+
+def test_partitioned_merge_refuses_batch_with_extra_column(spark, tmp_path):
+    """A batch column the target lacks must fail the merge, not be dropped
+    from the batch; the target is left as it was."""
+    import os
+
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from duckdb_ml_spark.sinks import merge_upsert_partitioned
+
+    target = str(tmp_path / "t")
+    base = spark.range(0, 16).select(
+        F.col("id").alias("k"),
+        F.col("id").cast("double").alias("v"),
+        (F.col("id") % 4).cast("int").alias("part"),
+    )
+    base.write.partitionBy("part").parquet(target)
+    batch = base.where(F.col("k") < 2).withColumn("extra", F.lit("x"))
+    with pytest.raises(AnalysisException):
+        merge_upsert_partitioned(spark, target, batch, ["k"], "part")
+    back = spark.read.parquet(target)
+    assert back.count() == 16 and back.columns == ["k", "v", "part"]
+    assert not os.path.isdir(target + ".staging")
 
 
 def test_exact_quantiles_lazy_fallback_equivalent(spark, sf_dir):
@@ -901,6 +936,24 @@ def test_token_shards_all_oov_source_skipped(spark, tmp_path):
     assert not any("dead" in f for f in files)
     back = read_token_shards_manifest(spark, out, seq_len=4).collect()
     assert [r["source"] for r in back] == ["live"]
+
+
+def test_token_shards_all_oov_corpus_reads_back_empty(spark, tmp_path):
+    """A corpus whose documents are ALL out-of-lexicon writes no shard at
+    all; its readback is 0 rows in both shapes (the oracle's inner join),
+    not a missing-path error."""
+    import os
+
+    from duckdb_ml_spark.sinks import read_token_shards_manifest, write_token_shards
+
+    rows = [(1, "zzz qqq yyy", "dead"), (2, None, "dead"), (3, "qqq", "gone")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
+    out = str(tmp_path / "alloov")
+    assert write_token_shards(spark, "", out, seq_len=4, docs=docs) == []
+    assert os.listdir(out) == []
+    for per_shard in (False, True):
+        back = read_token_shards_manifest(spark, out, seq_len=4, per_shard=per_shard)
+        assert back.collect() == []
 
 
 def test_rank_metrics_two_pass_equals_single_window(spark, sf_dir):

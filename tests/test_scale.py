@@ -54,11 +54,9 @@ def test_salted_join_equals_plain(spark, sf_dir):
 
 
 def test_partitioned_parquet_layout(spark, sf_dir, tmp_path):
-    from duckdb_ml_spark.sinks import write_parquet_partitioned
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     out = str(tmp_path / "docs_by_lang")
-    write_parquet_partitioned(docs, out, ["lang"])
+    docs.write.partitionBy("lang").mode("overwrite").parquet(out)
     subdirs = {d for d in os.listdir(out) if d.startswith("lang=")}
     assert len(subdirs) >= 2
     # partition pruning: filter on the partition column reads only that dir
